@@ -563,6 +563,31 @@ def read_commit_marker(out_dir: str, version: int | None = None) -> dict:
         return json.load(f)
 
 
+def _read_dataset_partitioned(
+    spark: SparkSession, base: str, paths: list[str]
+) -> DataFrame:
+    """Read a ``dataset=``-partitioned table with ``dataset`` as a
+    string. Spark infers partition column types, so a product whose
+    dataset uuids are all digits would read ``dataset`` back as a
+    number with its leading zeros gone. When inference typed it as
+    anything but a string, re-read with the inferred schema and
+    ``dataset`` pinned to string: a given schema takes the raw
+    directory value. The session-wide inference conf stays on, since
+    every other partitioned read in the engine relies on it."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    df = spark.read.option("basePath", base).parquet(*paths)
+    if isinstance(df.schema["dataset"].dataType, StringType):
+        return df
+    schema = StructType(
+        [
+            StructField("dataset", StringType()) if f.name == "dataset" else f
+            for f in df.schema.fields
+        ]
+    )
+    return spark.read.option("basePath", base).schema(schema).parquet(*paths)
+
+
 def read_product_table(
     spark: SparkSession, out_dir: str, table: str, version: int | None = None
 ) -> DataFrame:
@@ -583,6 +608,7 @@ def read_product_table(
     """
     marker = read_commit_marker(out_dir, version)
     if table in PARTITIONED_TABLES:
+        base = f"{out_dir}/{table}"
         per_ds = marker.get("files", {}).get(table)
         if per_ds is not None:
             paths = [
@@ -591,17 +617,15 @@ def read_product_table(
                 for rel, _ in per_ds.get(ds, [])
             ]
             if paths:
-                return spark.read.option(
-                    "basePath", f"{out_dir}/{table}"
-                ).parquet(*paths)
+                return _read_dataset_partitioned(spark, base, paths)
             # the snapshot references NO files for this table: schema
             # from the directory footer, zero rows — never the dir scan
             # (which could surface a crashed append attempt's orphans)
-            return spark.read.parquet(f"{out_dir}/{table}").filter(
+            return _read_dataset_partitioned(spark, base, [base]).filter(
                 F.lit(False)
             )
         # legacy pre-file-manifest marker
-        df = spark.read.parquet(f"{out_dir}/{table}")
+        df = _read_dataset_partitioned(spark, base, [base])
         return df.filter(F.col("dataset").isin(marker["dataset_uuids"]))
     tv = marker["table_versions"][table]
     return spark.read.parquet(f"{out_dir}/{table}/v={tv}")

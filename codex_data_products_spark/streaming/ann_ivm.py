@@ -5,8 +5,7 @@ knn_ivf_assign → knn_ivf / knn_ivf_multiprobe) retrains and reassigns
 the whole corpus per release. At 100 TB that rebuild is the pattern the
 dedup maintainers already killed one family over: the embedding corpus
 grows by a daily delta, and only the delta needs work. This module
-maintains a written IVF index under the same append-log + tombstone
-discipline as ``dedup_ivm``:
+maintains a written IVF index as ``streaming.logstate`` logs:
 
   centroids/v=0        the FROZEN coarse quantizer — exact-decimal
                        per-cell component means over the bootstrap
@@ -22,14 +21,8 @@ discipline as ``dedup_ivm``:
                        nprobe directories per batch dir and nothing
                        else (partition pruning, verified by
                        test_ann_ivm's inputFiles check).
-  removed/batch=<k>    release-grain vec_id tombstones. Strict rule
-                       shared with every other log here: a tombstone
-                       kills posting rows from STRICTLY EARLIER
-                       batches, so remove→re-add composes as two
-                       batches and a batch is internally consistent.
-  postings/compact=<c> crash-safe consolidation (``_SUCCESS``-gated,
-                       tombstones applied then dropped) — same
-                       protocol as ``compact_pair_log``.
+  removed/batch=<k>    release-grain vec_id tombstones; the posting
+                       log's compact floor stays partitioned by cell.
 
 Every maintenance write is O(delta): assignment is a broadcast of the
 |cells|-row frozen quantizer against the delta only; the corpus-scale
@@ -56,18 +49,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from codex_data_products_spark.streaming.dedup_ivm import (
+from codex_data_products_spark.streaming.logstate import (
+    _compact_floor,
     _empty,
     _gc_log_dirs,
+    _live_rows,
+    _long_frame,
     _log_union,
+    _tombstoned_log,
+    _write_batch,
     _write_tombstones,
+    drain,
 )
 
 _CENTROID_SCHEMA = "cell long, dim long, cv double"
 _POSTING_SCHEMA = (
     "vec_id long, cell long, v array<double>, nsq double, min_d2 double"
 )
-_REMOVED_SCHEMA = "vec_id long"
 
 # Hard ceiling on the pruned-probe (query_id, cell) collect in
 # ``search_ann`` — ~16 MB of pair rows. The pruned path's driver
@@ -181,32 +179,23 @@ def apply_ann_batch(
     """Fold one release batch into the maintained index. ``adds``
     (vec_id, embedding) are assigned to frozen cells and APPENDED as
     ``postings/batch=<batch_id>`` (partitioned by cell); ``removes``
-    (vec_id) append release-grain tombstones. Strict rule: the batch's
-    tombstones kill strictly-earlier posting rows, so this batch's own
-    adds survive its removes — a combined batch is an atomic replace
-    per the shared contract
-    (``streaming.dedup_ivm.COMBINED_BATCH_CONTRACT``). Replay
-    of a crashed batch overwrites both dirs — idempotent."""
-    if removes is not None:
-        rem = removes.select(F.col("vec_id").cast("long"))
-    else:
-        rem = _empty(spark, _REMOVED_SCHEMA)
-    _write_tombstones(
-        spark,
-        rem,
-        removes is not None,
-        f"{state_dir}/removed/batch={batch_id}",
-    )
+    (vec_id) append release-grain tombstones. A combined batch is an
+    atomic replace per the shared contract
+    (``streaming.logstate.COMBINED_BATCH_CONTRACT``)."""
+    rem = removes
+    if rem is not None:
+        rem = rem.select(F.col("vec_id").cast("long"))
+    _write_tombstones(spark, rem, f"{state_dir}/removed", batch_id)
     cent_vec = frozen_centroids(spark, state_dir)
     if adds is not None:
         rows = assign_cells(_as_double_vec(adds), cent_vec)
     else:
         rows = _empty(spark, _POSTING_SCHEMA)
-    (
-        rows.select("vec_id", "cell", "v", "nsq", "min_d2")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{state_dir}/postings/batch={batch_id}")
+    _write_batch(
+        rows.select("vec_id", "cell", "v", "nsq", "min_d2"),
+        f"{state_dir}/postings",
+        batch_id,
+        partition_by="cell",
     )
 
 
@@ -217,20 +206,12 @@ def ann_postings_snapshot(
     cells: list[int] | None = None,
 ) -> DataFrame:
     """The maintained posting table at ``version`` (None = head):
-    append-log union minus tombstones (strictly-older kill rule; the
-    release-grain tombstone aggregate broadcasts, the posting log is
-    never shuffled). ``cells`` prunes the scan to those partition
-    directories — the probe path."""
+    append-log union minus tombstones. ``cells`` prunes the scan to
+    those partition directories — the probe path."""
     post = _log_union(spark, f"{state_dir}/postings", _POSTING_SCHEMA, version)
     if cells is not None:
         post = post.filter(F.col("cell").isin([int(c) for c in cells]))
-    rem = _log_union(spark, f"{state_dir}/removed", _REMOVED_SCHEMA, version)
-    rmax = rem.groupBy("vec_id").agg(F.max("log_batch").alias("rb"))
-    return (
-        post.join(F.broadcast(rmax), "vec_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb", "log_batch")
-    )
+    return _live_rows(spark, post, f"{state_dir}/removed", version, "vec_id")
 
 
 def maintained_cell_balance(
@@ -340,22 +321,10 @@ def search_ann(
         probed_cells = sorted({int(r["cell"]) for r in pairs})
         # Arrow-backed local relation (round 11): a list-of-rows
         # createDataFrame is a defaultParallelism-partition Python RDD
-        # whose every action pays one Python worker round-trip per
-        # partition; the pandas path lands as ONE JVM-side batch
-        import pandas as pd
-
-        probe_df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "query_id": pd.array(
-                        [int(r["query_id"]) for r in pairs], dtype="int64"
-                    ),
-                    "cell": pd.array(
-                        [int(r["cell"]) for r in pairs], dtype="int64"
-                    ),
-                }
-            ),
-            schema="query_id long, cell long",
+        probe_df = _long_frame(
+            spark,
+            query_id=[int(r["query_id"]) for r in pairs],
+            cell=[int(r["cell"]) for r in pairs],
         )
         probes = probe_df.join(q, "query_id")
         post = ann_postings_snapshot(
@@ -469,49 +438,37 @@ def apply_pq_batch(
     adds: DataFrame | None = None,
     removes: DataFrame | None = None,
 ) -> None:
-    """Fold one release batch into the maintained PQ code table —
-    same log/tombstone/replay contract as ``apply_ann_batch``,
-    including the shared atomic-replace combined-batch semantics
-    (``streaming.dedup_ivm.COMBINED_BATCH_CONTRACT``) — the
-    two maintainers share a state dir in the full-index layout: one
-    tombstone write serves postings AND codes when the caller passes
-    the same removes to both)."""
-    if removes is not None:
-        rem = removes.select(F.col("vec_id").cast("long"))
-    else:
-        rem = _empty(spark, _REMOVED_SCHEMA)
-    _write_tombstones(
-        spark,
-        rem,
-        removes is not None,
-        f"{state_dir}/pq_removed/batch={batch_id}",
-    )
+    """Fold one release batch into the maintained PQ code table — the
+    ``apply_ann_batch`` contract on the ``pqcodes``/``pq_removed``
+    logs (the two maintainers share a state dir in the full-index
+    layout)."""
+    rem = removes
+    if rem is not None:
+        rem = rem.select(F.col("vec_id").cast("long"))
+    _write_tombstones(spark, rem, f"{state_dir}/pq_removed", batch_id)
     if adds is not None:
         rows = encode_pq(adds, frozen_pq_codebook(spark, state_dir))
     else:
         rows = _empty(spark, _PQ_CODE_SCHEMA)
-    rows.select("vec_id", "s", "code", "min_d").write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/pqcodes/batch={batch_id}")
+    _write_batch(
+        rows.select("vec_id", "s", "code", "min_d"),
+        f"{state_dir}/pqcodes",
+        batch_id,
+    )
 
 
 def pq_codes_snapshot(
     spark: SparkSession, state_dir: str, version: int | None = None
 ) -> DataFrame:
     """The maintained code table at ``version`` — append-log union
-    minus tombstones (strictly-older rule, broadcast tombstone
-    aggregate, code log never shuffled)."""
-    codes = _log_union(
-        spark, f"{state_dir}/pqcodes", _PQ_CODE_SCHEMA, version
-    )
-    rem = _log_union(
-        spark, f"{state_dir}/pq_removed", _REMOVED_SCHEMA, version
-    )
-    rmax = rem.groupBy("vec_id").agg(F.max("log_batch").alias("rb"))
-    return (
-        codes.join(F.broadcast(rmax), "vec_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb", "log_batch")
+    minus tombstones."""
+    return _tombstoned_log(
+        spark,
+        f"{state_dir}/pqcodes",
+        f"{state_dir}/pq_removed",
+        _PQ_CODE_SCHEMA,
+        version,
+        "vec_id",
     )
 
 
@@ -521,55 +478,31 @@ def run_ann_maintenance(
     checkpoint_dir: str,
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain of a vector stream (vec_id,
-    embedding) onto the maintained index — the streaming twin of
-    calling ``apply_ann_batch`` per batch (requires a bootstrapped
-    ``centroids/v=0``; standard replay contract: a crashed batch
-    overwrites its own dirs, so replay re-derives identical
-    snapshots). Posting-log compaction is ratio-triggered per batch
-    (``dedup_ivm.compaction_due``; None disables)."""
-    from codex_data_products_spark.streaming.dedup_ivm import (
-        compaction_due,
-    )
+    """``logstate.drain`` of a vector stream (vec_id, embedding) onto
+    the maintained index (requires a bootstrapped ``centroids/v=0``),
+    compacting when ``compaction_due`` (None disables)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        apply_ann_batch(
-            batch.sparkSession, state_dir, batch_id, adds=batch
-        )
-        if auto_compact_ratio is not None and compaction_due(
-            batch.sparkSession,
-            state_dir,
-            ("postings",),
-            auto_compact_ratio,
-        ):
-            compact_ann_postings(
-                batch.sparkSession, state_dir, upto=batch_id
-            )
+        apply_ann_batch(batch.sparkSession, state_dir, batch_id, adds=batch)
 
-    (
-        vectors.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_ann_postings(spark, state_dir, upto=batch_id)
+
+    auto = (state_dir, ("postings",), auto_compact_ratio, compact)
+    drain(vectors, checkpoint_dir, fold, auto)
 
 
 def compact_ann_postings(
     spark: SparkSession, state_dir: str, upto: int, gc: bool = True
 ) -> None:
-    """Collapse the posting log through batch ``upto`` into one
-    ``compact=<upto>`` dir (tombstone-filtered, partitioned by cell,
-    ``_SUCCESS``-gated — identical crash-safety contract to
-    ``compact_pair_log``: a torn attempt is invisible, superseded
-    batch dirs are garbage)."""
-    snap = ann_postings_snapshot(spark, state_dir, upto).localCheckpoint()
-    (
-        snap.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{state_dir}/postings/compact={upto}")
+    """Collapse the posting log through batch ``upto`` into its compact
+    floor (tombstone-filtered, partitioned by cell)."""
+    _compact_floor(
+        ann_postings_snapshot(spark, state_dir, upto),
+        f"{state_dir}/postings",
+        upto,
+        partition_by="cell",
     )
-    snap.unpersist()
     if gc:
         _gc_log_dirs(
             spark, (f"{state_dir}/postings", f"{state_dir}/removed"), upto

@@ -25,6 +25,7 @@ from codex_data_products_spark.plans.training_pipeline import (
     _STOPWORDS,
     CurationConfig,
 )
+from codex_data_products_spark.streaming.logstate import available_now
 
 
 def curate_stream(
@@ -72,13 +73,10 @@ def run_ingestion(
     """One availableNow drain of the curated stream into the corpus
     (partitioned by language); re-invoking with the same checkpoint
     resumes exactly-once from new files only."""
-    q = (
+    available_now(
         curated.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("lang_predicted")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()

@@ -22,34 +22,26 @@ where an endpoint was re-signed. A shingle crossing the cap has DF just
 above it, so the re-sign set is bounded by ~cap docs per newly-capped
 shingle — the refresh stays delta-proportional.
 
-State layout under ``state_dir`` (versioned snapshots, same
-``v=<batch_id>`` anchoring contract as every maintainer in
-``streaming.merge``; batch k reads v=k and overwrites v=k+1, so a
-foreachBatch replay re-derives the same snapshots):
+State layout under ``state_dir`` (log format, strictly-older tombstone
+rule and replay contract: ``streaming.logstate``):
 
-  * ``shingles/batch=<k>/`` — APPEND-ONLY uncapped (doc_id, shingle)
-    rows per ingest batch. O(|delta|) write; a replay overwrites only
-    its own ``batch=`` dir. At 100 TB this is the "persist signatures
-    bucketed, hash only the delta" table from SCALE.md — stored
-    bucketed by shingle so the affected-doc probe is a pruned scan.
+  * ``shingles/batch=<k>/`` — uncapped (doc_id, shingle) rows per
+    ingest batch. At 100 TB this is the "persist signatures bucketed,
+    hash only the delta" table from SCALE.md — stored bucketed by
+    shingle so the affected-doc probe is a pruned scan.
   * ``df/v=<k>`` — (shingle, df) corpus document frequencies (the one
-    remaining VERSIONED snapshot: an additive aggregate whose fold
-    anchors the replay contract; vocab-grain, not doc-grain).
-  * ``bands/batch=<k>`` — APPEND-ONLY (doc_id, b0, b1) MinHash band
-    signatures written by batch k-1: the batch's delta docs plus the
-    DF-cap re-sign set. Re-signed docs' OLD rows die through the same
-    ``pairs_removed`` tombstones that repair the pair log (strict
-    rule: a tombstone kills rows from strictly earlier batches, so the
-    same-batch re-sign survives). O(delta) write — the doc-grain
-    snapshot rewrite is gone (VERDICT r8 #2).
-  * ``pairs/batch=<k>`` — APPEND-ONLY (doc_a, doc_b, jaccard) pairs
-    first verified by batch k, with ``pairs_removed/batch=<k>`` doc
-    tombstones for the DF-cap re-sign repair: a re-signed doc's
-    pre-repair pairs die (tombstone batch > pair batch), its same-
-    batch re-verified pairs survive. The maintained view is the
-    tombstone-filtered union (``_tombstoned_pairs``) — the ONE table
-    that grows with corpus x duplicate density is never rewritten, so
-    a batch's pair-state write is O(delta).
+    VERSIONED snapshot: an additive aggregate whose fold anchors the
+    replay contract; vocab-grain, not doc-grain).
+  * ``bands/batch=<k>`` — (doc_id, b0, b1) MinHash band signatures
+    written by batch k-1: the batch's delta docs plus the DF-cap
+    re-sign set. Re-signed docs' OLD rows die through the same
+    ``pairs_removed`` tombstones that repair the pair log, the
+    same-batch re-sign survives (VERDICT r8 #2).
+  * ``pairs/batch=<k>`` — (doc_a, doc_b, jaccard) pairs first verified
+    by batch k, with ``pairs_removed/batch=<k>`` doc tombstones for the
+    DF-cap re-sign repair. The ONE table that grows with corpus x
+    duplicate density is never rewritten, so a batch's pair-state
+    write is O(delta).
 
 Invariants (property-tested in tests/test_streaming.py): after any
 sequence of insert batches with fresh doc_ids, ``pairs`` equals the
@@ -75,6 +67,24 @@ from codex_data_products_spark.queries.dedup import (
     _jaccard_for_pairs,
     minhash_bands,
     shingle_table,
+)
+from codex_data_products_spark.streaming.logstate import (
+    COMBINED_BATCH_CONTRACT,  # noqa: F401 — re-exported public name
+    PAIR,
+    _batch_ids,
+    _compact_floor,
+    _compact_log,
+    _empty,
+    _exists,
+    _gc_log_dirs,
+    _long_frame,
+    _remove_frame,
+    _tombstoned_log,
+    _write_batch,
+    _write_tombstones,
+    compaction_due,  # noqa: F401 — re-exported public name
+    drain,
+    log_floor_ratio,  # noqa: F401 — re-exported public name
 )
 from codex_data_products_spark.streaming.merge import read_table
 
@@ -105,118 +115,14 @@ class DedupStateDirs:
         return f"{self.root}/pairs"
 
 
-def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    """JVM-native empty frame, ONE empty partition (round 11, guide
-    §4). ``createDataFrame([], schema)`` builds a defaultParallelism-
-    partition Python RDD, so every downstream action pays a Python
-    worker round-trip per partition — the per-batch
-    ``rem_df.coalesce(1).write`` of an EMPTY tombstone frame (all six
-    maintainers) measured 6-7 s of pure fixed cost per batch, serial
-    through one task. A ``range(0)`` projection is pure JVM."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    st = _parse_datatype_string(schema)
-    return spark.range(0, 0, 1, 1).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
-    )
-
-
-def _write_tombstones(
-    spark: SparkSession, rem: DataFrame, has_removes: bool, path: str
-) -> None:
-    """Write one batch's removal-tombstone dir — or, for the common
-    insert-only batch, write NOTHING (round 11): every tombstone log is
-    read through ``_log_union``, which treats an absent ``batch=<k>``
-    dir as empty, so skipping the write saves a job per batch and keeps
-    every later log union one scan node narrower. Deleting a leftover
-    dir keeps replay over a crashed older attempt idempotent."""
-    if has_removes:
-        rem.coalesce(1).write.mode("overwrite").parquet(path)
-        return
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        fs.delete(jvm_path, True)
-
-
-COMBINED_BATCH_CONTRACT = """Shared combined add+remove batch contract
-(all six remove-capable IVM maintainers: apply_cluster_batch,
-apply_emb_batch, apply_substring_batch, apply_vocab_batch,
-apply_ann_batch, apply_pq_batch) — ATOMIC REPLACE:
-
-1. Removes apply to the state strictly BEFORE the batch: tombstones
-   written at batch k kill only strictly-earlier rows, and every
-   retraction/repair slice reads the pre-batch snapshot.
-2. Adds land at batch k and SURVIVE the batch's own tombstones (the
-   strictly-older rule), so an id in both adds and removes is replaced
-   atomically — old rows and all state derived from them retract, new
-   rows and their derived state land, in one batch.
-3. Corollary (the cross-family parity gate,
-   tests/test_streaming.py::test_combined_batch_equals_remove_then_add):
-   a combined batch at k yields the same head snapshot as a
-   remove-only batch at k followed by an add-only batch at k+1.
-"""
-
-
-def _remove_frame(
-    spark: SparkSession,
-    remove,
-    col: str = "doc_id",
-) -> tuple[DataFrame, bool]:
-    """Normalize a maintainer's ``remove`` argument — ``None``, an id
-    list/tuple, or a one-column DataFrame — into a distinct
-    ``(col long)`` frame plus a cheap known-nonempty flag. A DataFrame
-    input is localCheckpointed so the emptiness probe and every
-    downstream broadcast read one materialization; the ids never visit
-    the driver (10⁵+ retractions stay distributed)."""
-    if remove is None:
-        return _empty(spark, f"{col} long"), False
-    if isinstance(remove, DataFrame):
-        if col in remove.columns:
-            src = col
-        elif len(remove.columns) == 1:
-            src = remove.columns[0]
-        else:
-            raise ValueError(
-                f"remove frame has no '{col}' column and is ambiguous "
-                f"(columns={remove.columns}); pass a one-column id "
-                f"frame or one carrying '{col}'"
-            )
-        rem = (
-            remove.select(F.col(src).cast("long").alias(col))
-            .distinct()
-            .localCheckpoint()
-        )
-        return rem, not rem.isEmpty()
-    ids = list(dict.fromkeys(int(d) for d in remove))
-    if not ids:
-        return _empty(spark, f"{col} long"), False
-    # Arrow-backed local relation: one JVM-side batch, no Python-RDD
-    # partitions (a coalesce(1) over those serializes a worker
-    # round-trip per partition — see _empty) and no py4j per-element
-    # literal conversion (an exploded lit(ids) measured 65 s at 10⁵ ids)
-    import pandas as pd
-
-    return (
-        spark.createDataFrame(
-            pd.DataFrame({col: pd.array(ids, dtype="int64")})
-        ),
-        True,
-    )
-
-
 def bootstrap_dedup_state(spark: SparkSession, state_dir: str) -> DedupStateDirs:
     """Write the v=0 snapshots (empty corpus — every document then
     arrives through the change feed; an existing corpus is just a big
     first batch)."""
     dirs = DedupStateDirs(state_dir)
     _empty(spark, _DF_SCHEMA).write.mode("overwrite").parquet(f"{dirs.df}/v=0")
-    _empty(spark, _BANDS_SCHEMA).write.mode("overwrite").parquet(
-        f"{dirs.bands}/batch=0"
-    )
-    _empty(spark, _PAIRS_SCHEMA).write.mode("overwrite").parquet(
-        f"{dirs.pairs}/batch=0"
-    )
+    _write_batch(_empty(spark, _BANDS_SCHEMA), dirs.bands, 0)
+    _write_batch(_empty(spark, _PAIRS_SCHEMA), dirs.pairs, 0)
     return dirs
 
 
@@ -226,15 +132,10 @@ def _prior_shingles(
     """Uncapped shingle rows of every batch BEFORE this one. The
     current batch's own dir is excluded explicitly so a crashed
     attempt's leftover partition can never double-count on replay."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(dirs.shingles)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return _empty(spark, _SHINGLE_SCHEMA)
-    paths = []
-    for status in fs.listStatus(jvm_path):
-        name = status.getPath().getName()
-        if name.startswith("batch=") and int(name[6:]) < batch_id:
-            paths.append(f"{dirs.shingles}/{name}")
+    paths = [
+        f"{dirs.shingles}/batch={k}"
+        for k in _batch_ids(spark, dirs.shingles, batch_id - 1)
+    ]
     if not paths:
         return _empty(spark, _SHINGLE_SCHEMA)
     return spark.read.schema(_SHINGLE_SCHEMA).parquet(*paths)
@@ -263,9 +164,7 @@ def apply_dedup_batch(
 
     # -- 1. shingle the delta; append (idempotently) to the shingle log
     delta_sh = shingle_table(batch_docs).persist()
-    delta_sh.write.mode("overwrite").parquet(
-        f"{dirs.shingles}/batch={batch_id}"
-    )
+    _write_batch(delta_sh, dirs.shingles, batch_id)
 
     # -- 2. fold DF counts (additive agg state, same algebra as
     #       combine_agg_state) and find shingles the delta pushed over
@@ -364,24 +263,15 @@ def apply_dedup_batch(
     #       tombstones ONLY the DF-cap-affected OLD docs (delta docs
     #       have no prior pairs to retract, keeping the accumulated
     #       tombstone set release-grain — it must stay broadcastable
-    #       forever). A re-signed doc's pre-repair pairs die (tombstone
-    #       batch > pair batch); its re-verified pairs, written in the
-    #       SAME batch, survive the strict rule. The corpus-scale pair
-    #       set is never rewritten — the write is O(delta).
+    #       forever). The corpus-scale pair set is never rewritten.
     new_df.write.mode("overwrite").parquet(f"{dirs.df}/v={batch_id + 1}")
-    # band state is an append-only log too (VERDICT r8 #2): write ONLY
-    # the re-sign set's new signatures — re-signed OLD docs' previous
-    # band rows die via the same pairs_removed tombstones below (their
-    # SAME-batch replacements survive the strict rule), so no doc-grain
-    # snapshot rewrite
-    bands_r.write.mode("overwrite").parquet(
-        f"{dirs.bands}/batch={batch_id + 1}"
-    )
-    verified.write.mode("overwrite").parquet(
-        f"{dirs.pairs}/batch={batch_id + 1}"
-    )
-    affected.select("doc_id").write.mode("overwrite").parquet(
-        f"{dirs.root}/pairs_removed/batch={batch_id + 1}"
+    # band log (VERDICT r8 #2): ONLY the re-sign set's new signatures —
+    # re-signed OLD docs' previous band rows die via the same
+    # pairs_removed tombstones below
+    _write_batch(bands_r, dirs.bands, batch_id + 1)
+    _write_batch(verified, dirs.pairs, batch_id + 1)
+    _write_batch(
+        affected.select("doc_id"), f"{dirs.root}/pairs_removed", batch_id + 1
     )
     for frame in (delta_sh, folded, affected, resign, bands_r, cand):
         frame.unpersist()
@@ -393,35 +283,19 @@ def run_dedup_maintenance(
     checkpoint_dir: str,
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain of a document stream onto the
-    maintained duplicate-pair view — the streaming twin of calling
-    ``apply_dedup_batch`` per batch, with the standard replay contract:
-    a batch anchored to v=batch_id overwrites v=batch_id+1 (and its own
-    ``shingles/batch=`` dir), so a crash between state write and
-    checkpoint commit re-derives identical snapshots. Pair/band-log
-    compaction is ratio-triggered per batch (``compaction_due``; None
-    disables)."""
+    """``logstate.drain`` of a document stream onto the maintained
+    duplicate-pair view, compacting the pair/band logs when
+    ``compaction_due`` (None disables)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         apply_dedup_batch(batch, state_dir, batch_id)
-        if auto_compact_ratio is not None and compaction_due(
-            batch.sparkSession,
-            state_dir,
-            ("pairs", "bands"),
-            auto_compact_ratio,
-        ):
-            compact_dedup_pairs(
-                batch.sparkSession, state_dir, upto=batch_id + 1
-            )
-            expire_dedup_state(state_dir, keep_last=2)
 
-    (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_dedup_pairs(spark, state_dir, upto=batch_id + 1)
+        expire_dedup_state(state_dir, keep_last=2)
+
+    auto = (state_dir, ("pairs", "bands"), auto_compact_ratio, compact)
+    drain(docs, checkpoint_dir, fold, auto)
 
 
 def dedup_pairs_snapshot(
@@ -430,14 +304,15 @@ def dedup_pairs_snapshot(
     """The maintained view: (doc_a, doc_b, jaccard) — equal to
     ``dedup_minhash_lsh`` recomputed from scratch over every document
     ingested up to ``version``. Assembled from the append-only pair
-    log minus the DF-cap re-sign tombstones (``_tombstoned_pairs``)."""
+    log minus the DF-cap re-sign tombstones."""
     dirs = DedupStateDirs(state_dir)
-    return _tombstoned_pairs(
+    return _tombstoned_log(
         spark,
         dirs.pairs,
         f"{dirs.root}/pairs_removed",
         _PAIRS_SCHEMA,
         version,
+        PAIR,
     )
 
 
@@ -459,29 +334,16 @@ def dedup_pairs_snapshot(
 #   * verification is free: the signature IS the state, hamming =
 #     bit_count(xor) on the joined row.
 #
-# State under ``state_dir``: an APPEND-ONLY signature log
-# ``sim/batch=<k>`` (doc_id, simhash) — each batch writes only its
-# delta's signatures; removed docs' rows die via the same
-# ``sim_removed`` tombstones that repair the pair log (VERDICT r8 #2:
-# the per-batch doc-grain snapshot rewrite is gone) — and
-# an APPEND-STRUCTURED pair log: ``sim_pairs/batch=<k>`` holds ONLY the
-# pairs batch k added and ``sim_removed/batch=<k>`` only the doc_ids it
-# removed. The pair-grain state — the one table that grows with
-# corpus x duplicate density, 28M rows at the sf1.0 stress corpus — is
-# therefore never rewritten: a batch's pair-state write is O(delta),
-# closing the honest-accounting gap SCALE.md recorded for round 8's
-# cluster maintainer (snapshot writes dominated the delta wall time).
-# Snapshot reads are by explicit batch-dir listing pinned to
-# <= version (a crashed future attempt's partition can never leak in —
-# the _prior_shingles discipline), with removals applied as tombstones:
-# a pair dies iff an endpoint has a removal at batch >= the pair's own
-# batch, which keeps remove-then-re-add (the documented two-batch
-# replace protocol) correct: the re-added doc's new pairs postdate the
-# tombstone. The removal set is release-grain, so the anti-join
-# broadcasts it and never shuffles the pair log. Long-lived logs trade
-# write amplification for read fan-in (one parquet scan per batch dir);
-# compacting ranges of batch dirs into one is an offline concern the
-# replay contract already permits (rewrite dirs 0..k as one, keep ids).
+# State under ``state_dir`` (``streaming.logstate`` logs): the signature
+# log ``sim/batch=<k>`` (doc_id, simhash) and the pair log
+# ``sim_pairs/batch=<k>`` hold only what batch k added, and
+# ``sim_removed/batch=<k>`` the doc_ids it removed — one tombstone kills
+# a removed doc's signature and its pairs. The pair-grain state — the
+# one table that grows with corpus x duplicate density, 28M rows at the
+# sf1.0 stress corpus — is therefore never rewritten: a batch's
+# pair-state write is O(delta), closing the honest-accounting gap
+# SCALE.md recorded for round 8's cluster maintainer (snapshot writes
+# dominated the delta wall time).
 
 _SIM_SCHEMA = "doc_id long, simhash long"
 _SIM_PAIRS_SCHEMA = "doc_a long, doc_b long, hamming long"
@@ -491,75 +353,10 @@ _SIM_REMOVED_SCHEMA = "doc_id long"
 def bootstrap_simhash_state(spark: SparkSession, state_dir: str) -> None:
     """batch=0 state (empty corpus; an existing corpus is just a big
     first batch)."""
-    _empty(spark, _SIM_SCHEMA).write.mode("overwrite").parquet(
-        f"{state_dir}/sim/batch=0"
+    _write_batch(_empty(spark, _SIM_SCHEMA), f"{state_dir}/sim", 0)
+    _write_batch(
+        _empty(spark, _SIM_PAIRS_SCHEMA), f"{state_dir}/sim_pairs", 0
     )
-    _empty(spark, _SIM_PAIRS_SCHEMA).write.mode("overwrite").parquet(
-        f"{state_dir}/sim_pairs/batch=0"
-    )
-
-
-def _log_union(
-    spark: SparkSession,
-    root: str,
-    schema: str,
-    upto: int | None = None,
-) -> DataFrame:
-    """Union of an append-only log's ``batch=<k>`` partitions with
-    k <= ``upto`` (all when None), read by EXPLICIT path with an
-    explicit schema — a torn partition from a crashed future attempt
-    is never listed, let alone schema-probed. Adds ``log_batch`` so
-    readers can order additions against tombstones.
-
-    Compaction-aware: if ``compact=<c>`` consolidated dirs exist (see
-    ``compact_pair_log``), the reader takes the HIGHEST complete one
-    with c <= upto as the floor — it already holds the
-    tombstone-filtered union of everything through batch c, labeled
-    log_batch=c — and layers only the batch dirs ABOVE the floor on
-    top. A compact dir is trusted only if its ``_SUCCESS`` marker
-    exists (Spark writes it last), so a crashed compaction attempt is
-    invisible and compaction needs no coordination with readers:
-    superseded batch dirs are pure garbage whose presence or absence
-    never changes a snapshot."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    full = schema + ", log_batch long"
-    if not fs.exists(jvm_path):
-        return _empty(spark, full)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    batch_dirs: list[int] = []
-    floor = -1
-    for status in fs.listStatus(jvm_path):
-        name = status.getPath().getName()
-        if name.startswith("batch="):
-            batch_dirs.append(int(name[6:]))
-        elif name.startswith("compact="):
-            c = int(name[8:])
-            if (upto is None or c <= upto) and fs.exists(
-                Path(f"{root}/{name}/_SUCCESS")
-            ):
-                floor = max(floor, c)
-    frames = []
-    if floor >= 0:
-        frames.append(
-            spark.read.schema(schema)
-            .parquet(f"{root}/compact={floor}")
-            .withColumn("log_batch", F.lit(floor).cast("long"))
-        )
-    for k in sorted(batch_dirs):
-        if k <= floor or (upto is not None and k > upto):
-            continue
-        frames.append(
-            spark.read.schema(schema)
-            .parquet(f"{root}/batch={k}")
-            .withColumn("log_batch", F.lit(k).cast("long"))
-        )
-    if not frames:
-        return _empty(spark, full)
-    out = frames[0]
-    for frame in frames[1:]:
-        out = out.unionByName(frame)
-    return out
 
 
 def compact_pair_log(
@@ -570,119 +367,26 @@ def compact_pair_log(
     upto: int,
     gc: bool = True,
 ) -> None:
-    """Collapse a pair log's history through batch ``upto`` into one
-    consolidated ``compact=<upto>`` dir (the tombstone-filtered union —
-    tombstones <= upto are fully applied, so they can be dropped: under
-    the strict rule they only ever killed pairs with batch < their own,
-    and every surviving pair is re-labeled to batch=upto, which no
-    tombstone <= upto can reach). Crash-safe without coordination: the
-    consolidated dir is trusted by readers only once its ``_SUCCESS``
-    marker exists, so a torn attempt is invisible and a restart simply
-    overwrites it; the superseded batch dirs (and older compact dirs)
-    are garbage whose presence never changes a snapshot — ``gc=True``
-    removes them after the compact dir is complete. Run between
+    """Collapse a pair log's history through batch ``upto`` into its
+    compact floor (``streaming.logstate``); ``gc=True`` then
+    removes the superseded pair and tombstone dirs. Run between
     maintenance batches (upto <= the committed head); snapshots pinned
     to versions inside the compacted range are collapsed into it, reads
     at versions >= upto are exact and unchanged."""
-    # localCheckpoint BEFORE the write: a re-compaction at the same
-    # upto reads the existing compact dir as its own floor, and
-    # overwrite deletes the target first — the eager checkpoint cuts
-    # the write's lineage from the files it is about to replace
-    snap = _tombstoned_pairs(
-        spark, pairs_root, removed_root, schema, upto
-    ).localCheckpoint()
-    snap.write.mode("overwrite").parquet(f"{pairs_root}/compact={upto}")
-    snap.unpersist()
+    _compact_log(spark, pairs_root, removed_root, schema, upto, PAIR)
     if gc:
         _gc_log_dirs(spark, (pairs_root, removed_root), upto)
-
-
-def _gc_log_dirs(
-    spark: SparkSession, roots: tuple[str, ...], upto: int
-) -> None:
-    """Delete batch dirs <= upto and compact dirs < upto — garbage
-    superseded by a completed ``compact=<upto>`` consolidation (shared
-    by every append-log compactor: pairs, coverage, grams)."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    for root in roots:
-        jvm_path = Path(root)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            continue
-        for status in fs.listStatus(jvm_path):
-            name = status.getPath().getName()
-            dead = (
-                name.startswith("batch=") and int(name[6:]) <= upto
-            ) or (
-                name.startswith("compact=") and int(name[8:]) < upto
-            )
-            if dead:
-                fs.delete(status.getPath(), True)
-
-
-def _log_dir_bytes(spark: SparkSession, root: str) -> tuple[int, int]:
-    """(uncompacted_batch_bytes, compact_floor_bytes) of one log root —
-    driver-side metadata listing only (one FS listStatus + a content
-    summary per first-level dir), never a data read."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return 0, 0
-    logs = floor = 0
-    for status in fs.listStatus(jvm_path):
-        name = status.getPath().getName()
-        size = fs.getContentSummary(status.getPath()).getLength()
-        if name.startswith("batch="):
-            logs += size
-        elif name.startswith("compact="):
-            floor += size
-    return logs, floor
-
-
-def log_floor_ratio(
-    spark: SparkSession, state_dir: str, tables: tuple[str, ...]
-) -> float:
-    """Un-compacted log bytes over compact-floor bytes, summed across
-    the named log tables under ``state_dir`` — the self-managing
-    compaction trigger (VERDICT r10 #3). 0.0 when nothing is
-    un-compacted; inf when batch dirs exist with no floor yet (the
-    first compaction establishes the floor)."""
-    logs = floor = 0
-    for t in tables:
-        l, f = _log_dir_bytes(spark, f"{state_dir}/{t}")
-        logs += l
-        floor += f
-    if logs == 0:
-        return 0.0
-    if floor == 0:
-        return float("inf")
-    return logs / floor
-
-
-def compaction_due(
-    spark: SparkSession,
-    state_dir: str,
-    tables: tuple[str, ...],
-    threshold: float = 1.0,
-) -> bool:
-    """True when the maintainer should fold its logs: the un-compacted
-    history has grown past ``threshold`` × the compact floor. At the
-    default 1.0 the total state stays within ~2× of a fresh snapshot
-    (floor + at-most-floor of logs + the triggering batch), without
-    any operator-invoked compaction."""
-    return log_floor_ratio(spark, state_dir, tables) >= threshold
 
 
 def expire_dedup_state(state_dir: str, keep_last: int = 2) -> list[str]:
     """Retention-based GC for a maintainer's VERSIONED state tables —
     after the round-9 log conversion that is only ``df/v=`` (the
     MinHash DF aggregate); every doc-, pair- and cluster-grain table is
-    an append log reclaimed by its compactor instead, and their
-    ``batch=``/``compact=`` dirs are never touched here. Keeps the
-    newest ``keep_last`` versions per table and deletes the rest.
+    an append log reclaimed by its compactor instead. Keeps the newest
+    ``keep_last`` versions per table and deletes the rest.
     Single-writer: call between batches. ``keep_last=2`` (head and
-    head-1) always covers the standard replay window — a crashed batch
-    k re-reads v=k, the previous head. Returns what was deleted."""
+    head-1) always covers the replay window — a crashed batch k
+    re-reads v=k, the previous head. Returns what was deleted."""
     import os
     import shutil
 
@@ -702,33 +406,6 @@ def expire_dedup_state(state_dir: str, keep_last: int = 2) -> list[str]:
     return removed
 
 
-def _root_exists(spark: SparkSession, root: str) -> bool:
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jvm_path))
-
-
-def _compact_doc_log(
-    spark: SparkSession,
-    rows_root: str,
-    removed_root: str,
-    schema: str,
-    upto: int,
-) -> None:
-    """Consolidate a doc-tombstoned row log through ``upto`` into one
-    ``compact=<upto>`` dir (same crash-safe _SUCCESS-gated protocol as
-    ``compact_pair_log``; applied tombstones drop — surviving rows are
-    re-labeled log_batch=upto, out of reach of any tombstone <= upto
-    under the strict rule). GC of the superseded dirs is the caller's
-    job: the tombstone root may be SHARED with a pair log, so deletion
-    must happen once, after every log reading it is consolidated."""
-    snap = _doc_tombstoned_log(
-        spark, rows_root, removed_root, schema, upto
-    ).localCheckpoint()
-    snap.write.mode("overwrite").parquet(f"{rows_root}/compact={upto}")
-    snap.unpersist()
-
-
 def compact_simhash_pairs(
     spark: SparkSession, state_dir: str, upto: int, gc: bool = True
 ) -> None:
@@ -741,43 +418,19 @@ def compact_simhash_pairs(
     garbage; the floor's rows carry log_batch=upto, which the
     strictly-earlier guard already keeps any surviving stale map away
     from)."""
-    compact_pair_log(
-        spark,
-        f"{state_dir}/sim_pairs",
-        f"{state_dir}/sim_removed",
-        _SIM_PAIRS_SCHEMA,
-        upto,
-        gc=False,
+    pairs, removed, sim, clusters = (
+        f"{state_dir}/{t}"
+        for t in ("sim_pairs", "sim_removed", "sim", "clusters")
     )
-    _compact_doc_log(
-        spark,
-        f"{state_dir}/sim",
-        f"{state_dir}/sim_removed",
-        _SIM_SCHEMA,
-        upto,
-    )
-    has_clusters = _root_exists(spark, f"{state_dir}/clusters")
-    if has_clusters:
-        snap = cluster_snapshot(spark, state_dir, version=upto).select(
-            "doc_id", "component_id"
-        ).localCheckpoint()
-        snap.write.mode("overwrite").parquet(
-            f"{state_dir}/clusters/compact={upto}"
-        )
-        snap.unpersist()
+    _compact_log(spark, pairs, removed, _SIM_PAIRS_SCHEMA, upto, PAIR)
+    _compact_log(spark, sim, removed, _SIM_SCHEMA, upto)
+    roots = (pairs, removed, sim)
+    if _exists(spark, clusters):
+        snap = cluster_snapshot(spark, state_dir, version=upto)
+        _compact_floor(snap.select("doc_id", "component_id"), clusters, upto)
+        roots += (clusters, f"{clusters}_removed", f"{clusters}_remap")
     if gc:
-        roots = [
-            f"{state_dir}/sim_pairs",
-            f"{state_dir}/sim_removed",
-            f"{state_dir}/sim",
-        ]
-        if has_clusters:
-            roots += [
-                f"{state_dir}/clusters",
-                f"{state_dir}/clusters_removed",
-                f"{state_dir}/clusters_remap",
-            ]
-        _gc_log_dirs(spark, tuple(roots), upto)
+        _gc_log_dirs(spark, roots, upto)
 
 
 def compact_dedup_pairs(
@@ -787,84 +440,11 @@ def compact_dedup_pairs(
     log through ``upto`` (they share the ``pairs_removed`` tombstone
     root, so both fold before its dirs are GC'd)."""
     dirs = DedupStateDirs(state_dir)
-    compact_pair_log(
-        spark,
-        dirs.pairs,
-        f"{dirs.root}/pairs_removed",
-        _PAIRS_SCHEMA,
-        upto,
-        gc=False,
-    )
-    _compact_doc_log(
-        spark,
-        dirs.bands,
-        f"{dirs.root}/pairs_removed",
-        _BANDS_SCHEMA,
-        upto,
-    )
+    removed = f"{dirs.root}/pairs_removed"
+    _compact_log(spark, dirs.pairs, removed, _PAIRS_SCHEMA, upto, PAIR)
+    _compact_log(spark, dirs.bands, removed, _BANDS_SCHEMA, upto)
     if gc:
-        _gc_log_dirs(
-            spark,
-            (dirs.pairs, f"{dirs.root}/pairs_removed", dirs.bands),
-            upto,
-        )
-
-
-def _tombstoned_pairs(
-    spark: SparkSession,
-    pairs_root: str,
-    removed_root: str,
-    schema: str,
-    version: int | None = None,
-) -> DataFrame:
-    """Assemble a pair snapshot from an append-only pair log minus doc
-    tombstones: a pair is dead iff an endpoint has a tombstone at a
-    batch STRICTLY AFTER the pair's own batch — so a batch that
-    re-signs a doc (MinHash DF-cap repair) or re-adds a removed one
-    (the two-batch replace protocol) keeps its own batch's pairs while
-    killing every earlier one. The tombstone set is release-grain by
-    construction (removed docs / DF-cap-affected docs, never the
-    delta), so it broadcasts; the pair log itself is never shuffled."""
-    pairs = _log_union(spark, pairs_root, schema, version)
-    rem = _log_union(spark, removed_root, _SIM_REMOVED_SCHEMA, version)
-    rmax = rem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-    for side in ("doc_a", "doc_b"):
-        pairs = (
-            pairs.join(
-                F.broadcast(rmax.withColumnRenamed("doc_id", side)),
-                side,
-                "left",
-            )
-            .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-            .drop("rb")
-        )
-    return pairs.drop("log_batch")
-
-
-def _doc_tombstoned_log(
-    spark: SparkSession,
-    rows_root: str,
-    removed_root: str,
-    schema: str,
-    version: int | None = None,
-    keep_log_batch: bool = False,
-) -> DataFrame:
-    """Assemble a DOC-GRAIN snapshot from an append-only row log minus
-    doc tombstones — the single-endpoint sibling of
-    ``_tombstoned_pairs`` (same strict rule: a tombstone kills rows
-    from strictly earlier batches, so a batch that re-signs or re-adds
-    a doc keeps its own batch's row while killing every older one).
-    The tombstone set is release-grain, so it broadcasts; the row log
-    streams through one broadcast join, never shuffles."""
-    rows = _log_union(spark, rows_root, schema, version)
-    rem = _log_union(spark, removed_root, _SIM_REMOVED_SCHEMA, version)
-    rmax = rem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-    out = (
-        rows.join(F.broadcast(rmax), "doc_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb")
-    )
-    return out if keep_log_batch else out.drop("log_batch")
+        _gc_log_dirs(spark, (dirs.pairs, removed, dirs.bands), upto)
 
 
 def bands_snapshot(
@@ -874,7 +454,7 @@ def bands_snapshot(
     assembled from the append-only ``bands`` log minus the DF-cap
     re-sign tombstones (shared with the pair log)."""
     dirs = DedupStateDirs(state_dir)
-    return _doc_tombstoned_log(
+    return _tombstoned_log(
         spark,
         dirs.bands,
         f"{dirs.root}/pairs_removed",
@@ -890,13 +470,8 @@ def sim_snapshot(
     assembled from the append-only ``sim`` log minus removal
     tombstones (shared with the pair log: a removed doc's signature
     and its pairs die through the same ``sim_removed`` entry)."""
-    return _doc_tombstoned_log(
-        spark,
-        f"{state_dir}/sim",
-        f"{state_dir}/sim_removed",
-        _SIM_SCHEMA,
-        version,
-    )
+    sim = f"{state_dir}/sim"
+    return _tombstoned_log(spark, sim, f"{sim}_removed", _SIM_SCHEMA, version)
 
 
 def _sim_band_keys(side: str, banding: str) -> list:
@@ -971,10 +546,8 @@ def apply_simhash_batch(
     fresh = _fresh_sim_pairs(delta, new_sim, banding)
 
     v = batch_id + 1
-    delta.write.mode("overwrite").parquet(f"{state_dir}/sim/batch={v}")
-    fresh.write.mode("overwrite").parquet(
-        f"{state_dir}/sim_pairs/batch={v}"
-    )
+    _write_batch(delta, f"{state_dir}/sim", v)
+    _write_batch(fresh, f"{state_dir}/sim_pairs", v)
     delta.unpersist()
 
 
@@ -985,31 +558,17 @@ def run_simhash_maintenance(
     banding: str = "2x16",
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain onto the maintained SimHash pair
-    view — same replay contract as run_dedup_maintenance: batch k reads
-    v=k, overwrites v=k+1, so a crash between state write and
-    checkpoint commit re-derives identical snapshots. Compaction is
-    ratio-triggered per batch (``compaction_due``; None disables)."""
+    """``logstate.drain`` onto the maintained SimHash pair view,
+    compacting when ``compaction_due`` (None disables)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         apply_simhash_batch(batch, state_dir, batch_id, banding=banding)
-        if auto_compact_ratio is not None and compaction_due(
-            batch.sparkSession,
-            state_dir,
-            ("sim", "sim_pairs"),
-            auto_compact_ratio,
-        ):
-            compact_simhash_pairs(
-                batch.sparkSession, state_dir, upto=batch_id + 1
-            )
 
-    (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_simhash_pairs(spark, state_dir, upto=batch_id + 1)
+
+    auto = (state_dir, ("sim", "sim_pairs"), auto_compact_ratio, compact)
+    drain(docs, checkpoint_dir, fold, auto)
 
 
 def simhash_pairs_snapshot(
@@ -1020,15 +579,14 @@ def simhash_pairs_snapshot(
     ingested up to ``version`` (modulo the batch query's asymmetric
     doc_a < doc_b orientation, which the maintainer preserves via
     least/greatest normalization). Assembled from the append-only pair
-    log minus removal tombstones (``_tombstoned_pairs``; removals
-    precede additions inside a batch, so the strict tombstone rule is
-    exact here too)."""
-    return _tombstoned_pairs(
+    log minus removal tombstones."""
+    return _tombstoned_log(
         spark,
         f"{state_dir}/sim_pairs",
         f"{state_dir}/sim_removed",
         _SIM_PAIRS_SCHEMA,
         version,
+        PAIR,
     )
 
 
@@ -1073,9 +631,7 @@ def bootstrap_cluster_state(spark: SparkSession, state_dir: str) -> None:
     component (singletons carry their own id, matching the batch
     ``dedup_connected_components`` view)."""
     bootstrap_simhash_state(spark, state_dir)
-    _empty(spark, _CLUSTER_SCHEMA).write.mode("overwrite").parquet(
-        f"{state_dir}/clusters/batch=0"
-    )
+    _write_batch(_empty(spark, _CLUSTER_SCHEMA), f"{state_dir}/clusters", 0)
 
 
 def _cc_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -1155,25 +711,11 @@ def merge_map_for_fresh_pairs(
                 parent[hi] = lo  # min label is always the root
         mapping = [(x, find(x)) for x in list(parent) if find(x) != x]
         if not mapping:
-            return _empty(
-                spark, "component_id long, new_component_id long"
-            )
-        # Arrow-backed local relation — one JVM batch, no Python-RDD
-        # partitions (see _empty)
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "component_id": pd.array(
-                        [m[0] for m in mapping], dtype="int64"
-                    ),
-                    "new_component_id": pd.array(
-                        [m[1] for m in mapping], dtype="int64"
-                    ),
-                }
-            ),
-            schema="component_id long, new_component_id long",
+            return _empty(spark, _REMAP_SCHEMA)
+        return _long_frame(
+            spark,
+            component_id=[m[0] for m in mapping],
+            new_component_id=[m[1] for m in mapping],
         )
 
     if n_edges <= CLUSTER_MERGE_DRIVER_CAP:
@@ -1272,9 +814,7 @@ def apply_cluster_batch(
     """Fold one batch (NEW documents and/or removed doc_ids — an id
     list or a one-column DataFrame; the DataFrame form keeps bulk
     retractions fully distributed) into the maintained signature +
-    pair + CLUSTER state: read v=batch_id, write v=batch_id+1
-    (standard replay anchoring — a crashed batch re-runs to identical
-    snapshots).
+    pair + CLUSTER state: read v=batch_id, write v=batch_id+1.
 
     Order inside a batch: removals first (prune signatures and pairs,
     recompute ONLY the components that contained a removed doc from the
@@ -1282,9 +822,7 @@ def apply_cluster_batch(
     fresh pairs, label-grain merge). A fresh pair attaching to a
     just-split component therefore merges against the post-split
     labels. A doc in both this batch's adds and removes is an atomic
-    replace per the shared contract (``COMBINED_BATCH_CONTRACT``): the
-    pruned state predates the delta, and the batch's tombstones kill
-    only strictly-earlier rows. The affected-label set
+    replace per ``COMBINED_BATCH_CONTRACT``. The affected-label set
     never leaves the executors — every removal-side prune is a
     broadcast semi/anti join against release-grain frames.
 
@@ -1321,15 +859,12 @@ def apply_cluster_batch(
         sim_state = sim_state.join(
             F.broadcast(rem_df), "doc_id", "left_anti"
         )
-        pairs_state = pairs_state.join(
-            F.broadcast(rem_df.select(F.col("doc_id").alias("doc_a"))),
-            "doc_a",
-            "left_anti",
-        ).join(
-            F.broadcast(rem_df.select(F.col("doc_id").alias("doc_b"))),
-            "doc_b",
-            "left_anti",
-        )
+        for side in PAIR:
+            pairs_state = pairs_state.join(
+                F.broadcast(rem_df.select(F.col("doc_id").alias(side))),
+                side,
+                "left_anti",
+            )
         # tombstone EVERY doc of an affected component: the removed docs
         # die outright, the surviving members are re-emitted (with their
         # post-split labels) in this batch's own add log — the strict
@@ -1407,20 +942,14 @@ def apply_cluster_batch(
     v = batch_id + 1
     # every write below is delta-/release-grain: the corpus-scale sim,
     # pair and cluster tables are logs that only ever gain a batch dir
-    delta.write.mode("overwrite").parquet(f"{state_dir}/sim/batch={v}")
-    fresh.write.mode("overwrite").parquet(
-        f"{state_dir}/sim_pairs/batch={v}"
-    )
+    _write_batch(delta, f"{state_dir}/sim", v)
+    _write_batch(fresh, f"{state_dir}/sim_pairs", v)
     _write_tombstones(
-        spark, rem_df, has_removes, f"{state_dir}/sim_removed/batch={v}"
+        spark, rem_df if has_removes else None, f"{state_dir}/sim_removed", v
     )
-    adds.write.mode("overwrite").parquet(f"{state_dir}/clusters/batch={v}")
-    tomb.write.mode("overwrite").parquet(
-        f"{state_dir}/clusters_removed/batch={v}"
-    )
-    merge_map.write.mode("overwrite").parquet(
-        f"{state_dir}/clusters_remap/batch={v}"
-    )
+    _write_batch(adds, f"{state_dir}/clusters", v)
+    _write_batch(tomb, f"{state_dir}/clusters_removed", v)
+    _write_batch(merge_map, f"{state_dir}/clusters_remap", v)
     delta.unpersist()
     fresh.unpersist()
     merge_map.unpersist()
@@ -1438,9 +967,8 @@ def run_cluster_maintenance(
     compact_every: int | None = None,
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain of an insert stream onto the
-    maintained cluster view (same replay contract as the other
-    maintainers). Removals are release-grain control operations —
+    """``logstate.drain`` of an insert stream onto the maintained
+    cluster view. Removals are release-grain control operations —
     apply them directly via ``apply_cluster_batch(remove=...)``.
 
     ``compact_every=N`` folds the between-batch maintenance pass into
@@ -1457,52 +985,18 @@ def run_cluster_maintenance(
     crosses the threshold — total state stays within ~2× of a fresh
     snapshot with no operator-invoked compaction. ``None`` disables."""
 
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_simhash_pairs(spark, state_dir, upto=batch_id + 1)
+        expire_dedup_state(state_dir, keep_last=2)
+
     def fold(batch: DataFrame, batch_id: int) -> None:
         apply_cluster_batch(batch, state_dir, batch_id, banding=banding)
-        due = (
-            compact_every and (batch_id + 1) % compact_every == 0
-        ) or (
-            not compact_every
-            and auto_compact_ratio is not None
-            and compaction_due(
-                batch.sparkSession,
-                state_dir,
-                ("sim", "sim_pairs", "clusters"),
-                auto_compact_ratio,
-            )
-        )
-        if due:
-            compact_simhash_pairs(
-                batch.sparkSession, state_dir, upto=batch_id + 1
-            )
-            expire_dedup_state(state_dir, keep_last=2)
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            compact(batch.sparkSession, batch_id)
 
-    (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _remap_batch_ids(
-    spark: SparkSession, root: str, version: int | None
-) -> list[int]:
-    """Sorted batch ids of the remap log's ``batch=<k>`` dirs with
-    k <= version (all when None)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return []
-    out = []
-    for status in fs.listStatus(jvm_path):
-        name = status.getPath().getName()
-        if name.startswith("batch="):
-            k = int(name[6:])
-            if version is None or k <= version:
-                out.append(k)
-    return sorted(out)
+    tables = ("sim", "sim_pairs", "clusters")
+    auto = (state_dir, tables, auto_compact_ratio, compact)
+    drain(docs, checkpoint_dir, fold, None if compact_every else auto)
 
 
 def cluster_snapshot(
@@ -1522,16 +1016,17 @@ def cluster_snapshot(
     remap count, bounded by the compaction cadence. A label freed by a
     merge can later be reborn by a split — the strictly-earlier guard
     is what keeps a stale map from re-capturing it."""
-    live = _doc_tombstoned_log(
+    rows = f"{state_dir}/clusters"
+    live = _tombstoned_log(
         spark,
-        f"{state_dir}/clusters",
-        f"{state_dir}/clusters_removed",
+        rows,
+        f"{rows}_removed",
         _CLUSTER_SCHEMA,
         version,
         keep_log_batch=True,
     )
     remap_root = f"{state_dir}/clusters_remap"
-    for k in _remap_batch_ids(spark, remap_root, version):
+    for k in _batch_ids(spark, remap_root, version):
         m = (
             spark.read.schema(_REMAP_SCHEMA)
             .parquet(f"{remap_root}/batch={k}")

@@ -3,23 +3,22 @@ family's IVM twin (dedup_embedding_cosine, queries/dedup.py).
 
 The batch terminal pairs vectors within an IVF-style coarse partition
 (the ``label`` column) at cosine ≥ threshold. This maintainer keeps
-that pair view under batched ingest + removals with the engine's
-standard append-log discipline (streaming/dedup_ivm.py):
+that pair view under batched ingest + removals as
+``streaming.logstate`` logs:
 
   emb/batch=<k>          doc-grain vector log (vec_id, label, v, nsq)
   embpairs/batch=<k>     pair log (doc_a, doc_b, cosine) — the delta's
                          fresh pairs only, O(delta × cluster density)
   emb_removed/batch=<k>  release-grain vec_id tombstones shared by BOTH
                          logs (a removed vector's row and its pairs die
-                         through one tombstone, strictly-older rule)
+                         through one tombstone)
 
 Per batch the delta's vectors BROADCAST against the persisted vector
 snapshot on label equality (the corpus-scale side never shuffles —
 same plan contract as the SimHash maintainer, guarded in
 tests/test_plans.py); within-delta pairs surface from both directions
 and are normalized + distinct'd over the delta-proportional candidate
-set only. Compaction and GC reuse ``compact_pair_log`` /
-``_gc_log_dirs`` unchanged.
+set only.
 
 At 100 TB: every write is O(delta); the pair log is never rewritten;
 the label partition bounds each candidate join to cluster-local pairs
@@ -30,26 +29,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from codex_data_products_spark.streaming.dedup_ivm import (
-    _doc_tombstoned_log,
+from codex_data_products_spark.streaming.ann_ivm import _dot
+from codex_data_products_spark.streaming.dedup_ivm import compact_pair_log
+from codex_data_products_spark.streaming.logstate import (
+    PAIR,
+    _compact_log,
     _empty,
+    _gc_log_dirs,
+    _tombstoned_log,
+    _write_batch,
     _write_tombstones,
-    _log_union,
-    _tombstoned_pairs,
-    compact_pair_log,
+    drain,
 )
 
 _EMB_SCHEMA = "doc_id long, label long, v array<double>, nsq double"
 _EMB_PAIR_SCHEMA = "doc_a long, doc_b long, cosine double"
-_EMB_REMOVED_SCHEMA = "doc_id long"
-
-
-def _dot(x, y):
-    return F.aggregate(
-        F.zip_with(x, y, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
 
 
 def _emb_rows(adds: DataFrame) -> DataFrame:
@@ -69,13 +63,8 @@ def emb_snapshot(
 ) -> DataFrame:
     """The maintained vector table at ``version`` (doc-grain log minus
     tombstones; the log streams through one broadcast join)."""
-    return _doc_tombstoned_log(
-        spark,
-        f"{state_dir}/emb",
-        f"{state_dir}/emb_removed",
-        _EMB_SCHEMA,
-        version,
-    )
+    emb = f"{state_dir}/emb"
+    return _tombstoned_log(spark, emb, f"{emb}_removed", _EMB_SCHEMA, version)
 
 
 def _fresh_emb_pairs(
@@ -125,24 +114,15 @@ def apply_emb_batch(
     """Fold one release batch into the maintained near-dup pair view.
     ``adds`` (vec_id, embedding, label) append vector rows and their
     fresh pairs; ``removes`` (vec_id) append tombstones that kill
-    strictly-earlier rows AND pairs (shared root). A combined batch is
-    an atomic replace per the shared contract
-    (``streaming.dedup_ivm.COMBINED_BATCH_CONTRACT``): removed rows
-    leave the pairing corpus before
-    the delta pairs against it (so no pair with a dead endpoint is
-    ever written at this batch id), while a vec_id in both adds and
-    removes re-enters with its new vector. Replay of a crashed batch
-    overwrites all three dirs — idempotent."""
+    earlier rows AND pairs (shared root). A combined batch is an
+    atomic replace per ``streaming.logstate.COMBINED_BATCH_CONTRACT``:
+    removed rows leave the pairing corpus before the delta pairs
+    against it (so no pair with a dead endpoint is ever written at
+    this batch id)."""
+    rem = None
     if removes is not None:
         rem = removes.select(F.col("vec_id").cast("long").alias("doc_id"))
-    else:
-        rem = _empty(spark, _EMB_REMOVED_SCHEMA)
-    _write_tombstones(
-        spark,
-        rem,
-        removes is not None,
-        f"{state_dir}/emb_removed/batch={batch_id}",
-    )
+    _write_tombstones(spark, rem, f"{state_dir}/emb_removed", batch_id)
     if adds is not None:
         delta = _emb_rows(adds).localCheckpoint()
         # snapshot BEFORE this batch (its own dirs excluded) + the delta
@@ -151,19 +131,23 @@ def apply_emb_batch(
         # leave the corpus first — their pairs would be written at
         # batch_id and survive the batch's own strictly-older tombstones.
         prior = emb_snapshot(spark, state_dir, version=batch_id - 1)
-        if removes is not None:
+        if rem is not None:
             prior = prior.join(F.broadcast(rem), "doc_id", "left_anti")
         corpus = prior.unionByName(delta)
         pairs = _fresh_emb_pairs(delta, corpus, threshold)
     else:
         delta = _empty(spark, _EMB_SCHEMA)
         pairs = _empty(spark, _EMB_PAIR_SCHEMA)
-    delta.select("doc_id", "label", "v", "nsq").write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/emb/batch={batch_id}")
-    pairs.select("doc_a", "doc_b", "cosine").write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/embpairs/batch={batch_id}")
+    _write_batch(
+        delta.select("doc_id", "label", "v", "nsq"),
+        f"{state_dir}/emb",
+        batch_id,
+    )
+    _write_batch(
+        pairs.select("doc_a", "doc_b", "cosine"),
+        f"{state_dir}/embpairs",
+        batch_id,
+    )
     delta.unpersist()  # drop the localCheckpoint blocks — a long
     # drain must not accumulate one per batch in executor storage
 
@@ -173,12 +157,13 @@ def emb_pairs_snapshot(
 ) -> DataFrame:
     """(vec_a, vec_b, cosine) at ``version`` — pair log minus endpoint
     tombstones (strictly-older rule; the pair log never shuffles)."""
-    return _tombstoned_pairs(
+    return _tombstoned_log(
         spark,
         f"{state_dir}/embpairs",
         f"{state_dir}/emb_removed",
         _EMB_PAIR_SCHEMA,
         version,
+        PAIR,
     ).select(
         F.col("doc_a").alias("vec_a"),
         F.col("doc_b").alias("vec_b"),
@@ -193,15 +178,9 @@ def run_emb_dedup_maintenance(
     threshold: float = 0.38,
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain of a vector stream (vec_id,
-    embedding, label) onto the maintained near-dup pair view — the
-    streaming twin of calling ``apply_emb_batch`` per batch (standard
-    replay contract: a crashed batch overwrites its own dirs).
-    Compaction is ratio-triggered per batch
-    (``dedup_ivm.compaction_due``; None disables)."""
-    from codex_data_products_spark.streaming.dedup_ivm import (
-        compaction_due,
-    )
+    """``logstate.drain`` of a vector stream (vec_id, embedding, label)
+    onto the maintained near-dup pair view, compacting when
+    ``compaction_due`` (None disables)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         apply_emb_batch(
@@ -211,55 +190,25 @@ def run_emb_dedup_maintenance(
             adds=batch,
             threshold=threshold,
         )
-        if auto_compact_ratio is not None and compaction_due(
-            batch.sparkSession,
-            state_dir,
-            ("emb", "embpairs"),
-            auto_compact_ratio,
-        ):
-            compact_emb_state(
-                batch.sparkSession, state_dir, upto=batch_id
-            )
 
-    (
-        vectors.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_emb_state(spark, state_dir, upto=batch_id)
+
+    auto = (state_dir, ("emb", "embpairs"), auto_compact_ratio, compact)
+    drain(vectors, checkpoint_dir, fold, auto)
 
 
 def compact_emb_state(
     spark: SparkSession, state_dir: str, upto: int, gc: bool = True
 ) -> None:
     """Consolidate BOTH logs sharing the tombstone root through
-    ``upto`` (pair-log protocol: tombstones applied then dropped,
-    ``_SUCCESS``-gated, superseded dirs GC'd)."""
+    ``upto``; ``gc=True`` then removes the superseded dirs."""
     # vector log first (tombstone root still present), pair log second
     # with gc=True reclaims the shared tombstone dirs
-    snap = _doc_tombstoned_log(
-        spark,
-        f"{state_dir}/emb",
-        f"{state_dir}/emb_removed",
-        _EMB_SCHEMA,
-        upto,
-    ).localCheckpoint()
-    snap.write.mode("overwrite").parquet(f"{state_dir}/emb/compact={upto}")
-    snap.unpersist()
+    emb, removed = f"{state_dir}/emb", f"{state_dir}/emb_removed"
+    _compact_log(spark, emb, removed, _EMB_SCHEMA, upto)
     compact_pair_log(
-        spark,
-        f"{state_dir}/embpairs",
-        f"{state_dir}/emb_removed",
-        _EMB_PAIR_SCHEMA,
-        upto,
-        gc=gc,
+        spark, f"{state_dir}/embpairs", removed, _EMB_PAIR_SCHEMA, upto, gc
     )
     if gc:
-        # the pair compactor GC'd emb_removed and embpairs; reclaim
-        # emb's own superseded batch dirs too
-        from codex_data_products_spark.streaming.dedup_ivm import (
-            _gc_log_dirs,
-        )
-
-        _gc_log_dirs(spark, (f"{state_dir}/emb",), upto)
+        _gc_log_dirs(spark, (emb,), upto)

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from codex_data_products_spark.streaming.logstate import available_now
+
 # events.parquet has shipped ts as both TIMESTAMP(NANOS) (read as long +
 # convert) and TIMESTAMP(MICROS, ntz); probe the footer once and build
 # the matching stream schema, mirroring tables.table("events").
@@ -62,11 +64,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming twin of queries/events.events_tumbling_window."""
+def _window_counts(events: DataFrame, watermark: str, window, *keys: str):
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .groupBy(window, *keys)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(12,2)")), 2)
@@ -77,32 +78,25 @@ def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
             F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
                 "window_start"
             ),
-            "event_type",
+            *keys,
             "n_events",
             "total_value",
         )
     )
 
 
+def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Streaming twin of queries/events.events_tumbling_window."""
+    return _window_counts(
+        events, watermark, F.window("ts", "1 hour"), "event_type"
+    )
+
+
 def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming twin of queries/events.events_sliding_window: 1-hour
     windows sliding every 30 minutes (each event lands in 2 windows)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(12,2)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "n_events",
-            "total_value",
-        )
+    return _window_counts(
+        events, watermark, F.window("ts", "1 hour", "30 minutes")
     )
 
 
@@ -221,15 +215,11 @@ def run_to_memory(
 ) -> Any:
     """Execute a streaming frame to completion against current files
     (availableNow) into an in-memory table; returns the query handle."""
-    q = (
+    return available_now(
         stream_df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return q
 
 
 ANOMALY_OUTPUT_SCHEMA = (
@@ -490,23 +480,23 @@ SCD2_STATE_SCHEMA = "cur_type string, from_us long, n long"
 _SCD2_FMT = "%Y-%m-%d %H:%M:%S.%f"
 
 
-def _scd2_group(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
+def _scd2_rows(batches: Iterator[pd.DataFrame]) -> list[tuple[int, int, str]]:
+    """(ts_us, event_id, event_type) of every row in the group's batches."""
     rows: list[tuple[int, int, str]] = []
     for pdf in batches:
         rows.extend(
             (int(t.value // 1000), int(eid), str(et))
             for t, eid, et in zip(pdf["ts"], pdf["event_id"], pdf["event_type"])
         )
-    rows.sort()
+    return rows
 
-    cur_type, from_us, n = (
-        state.get if state.exists else (None, -1, 0)
-    )
+
+def _scd2_fold(
+    user_id, rows: list[tuple[int, int, str]], cur_type, from_us: int, n: int
+) -> tuple[list[pd.DataFrame], tuple]:
+    """Fold time-ordered rows into the open interval (cur_type,
+    from_us, n): returns the intervals they close and the new open
+    interval."""
     closed: list[pd.DataFrame] = []
     for ts_us, _eid, etype in rows:
         if cur_type is None:
@@ -530,7 +520,19 @@ def _scd2_group(
             cur_type, from_us, n = etype, ts_us, 1
         else:
             n += 1
-    state.update((cur_type, from_us, n))
+    return closed, (cur_type, from_us, n)
+
+
+def _scd2_group(
+    key: tuple,
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    (user_id,) = key
+    rows = sorted(_scd2_rows(batches))
+    start = state.get if state.exists else (None, -1, 0)
+    closed, interval = _scd2_fold(user_id, rows, *start)
+    state.update(interval)
     yield from closed
 
 
@@ -578,12 +580,7 @@ def _scd2_buffered_group(
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     (user_id,) = key
-    rows: list[tuple[int, int, str]] = []
-    for pdf in batches:
-        rows.extend(
-            (int(t.value // 1000), int(eid), str(et))
-            for t, eid, et in zip(pdf["ts"], pdf["event_id"], pdf["event_type"])
-        )
+    rows = _scd2_rows(batches)
     if state.exists:
         cur_type, from_us, n, b_ts, b_id, b_type = state.get
         rows.extend(
@@ -597,29 +594,9 @@ def _scd2_buffered_group(
     mature = [r for r in rows if r[0] <= wm_us]
     pending = [r for r in rows if r[0] > wm_us]
 
-    closed: list[pd.DataFrame] = []
-    for ts_us, _eid, etype in mature:
-        if cur_type is None:
-            cur_type, from_us, n = etype, ts_us, 1
-        elif etype != cur_type:
-            closed.append(
-                pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "event_type": [cur_type],
-                        "valid_from": [
-                            pd.Timestamp(from_us * 1000).strftime(_SCD2_FMT)
-                        ],
-                        "valid_to": [
-                            pd.Timestamp(ts_us * 1000).strftime(_SCD2_FMT)
-                        ],
-                        "n_events": [n],
-                    }
-                )
-            )
-            cur_type, from_us, n = etype, ts_us, 1
-        else:
-            n += 1
+    closed, (cur_type, from_us, n) = _scd2_fold(
+        user_id, mature, cur_type, from_us, n
+    )
     state.update(
         (
             cur_type,

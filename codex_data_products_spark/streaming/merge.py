@@ -3,12 +3,10 @@ onto a parquet-materialized base via ``foreachBatch`` + the batch
 ``merge_into`` operator — the streaming twin of ``merge_upsert``.
 
 Versioned-snapshot storage (``table_dir/v=<batch_id>``): each
-micro-batch reads its own PRE-batch snapshot (``v=batch_id``), merges,
-and writes ``v=batch_id + 1`` — so a foreachBatch retry re-derives the
-same output from the same base and overwrites the same version instead
-of double-applying (idempotent under Spark's batch-replay contract
-even for non-idempotent additive folds). Readers pick the max version — the poor-man's
-pointer swap every table format (Delta/Iceberg/Hudi) formalizes.
+micro-batch folds into its own PRE-batch snapshot and writes the next
+version (``_drain_snapshots``; replay contract: ``streaming.logstate``).
+Readers pick the max version — the poor-man's pointer swap every table
+format (Delta/Iceberg/Hudi) formalizes.
 
 At 100 TB the base side stays partition-pruned and (with a bucketed or
 range-clustered layout from ``plans.layout``) shuffle-free in the
@@ -24,22 +22,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from codex_data_products_spark.operators.joins import merge_into
+from codex_data_products_spark.streaming.logstate import _children, drain
 
 _VERSION_RE = re.compile(r"v=(\d+)$")
 
 
 def table_versions(spark: SparkSession, table_dir: str) -> list[int]:
     """Existing snapshot version numbers, ascending."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return []
-    out = []
-    for status in fs.listStatus(jvm_path):
-        m = _VERSION_RE.search(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    matches = (_VERSION_RE.search(n) for n in _children(spark, table_dir))
+    return sorted(int(m.group(1)) for m in matches if m)
 
 
 def read_table(
@@ -65,6 +56,29 @@ def bootstrap_table(base: DataFrame, table_dir: str) -> None:
     base.write.mode("overwrite").parquet(f"{table_dir}/v=0")
 
 
+def _drain_snapshots(
+    stream: DataFrame,
+    table_dir: str,
+    checkpoint_dir: str,
+    step,
+) -> None:
+    """``logstate.drain`` of a versioned-snapshot maintainer: batch k
+    folds ``step(state, batch)`` into its PRE-batch snapshot
+    (``v=k``) and overwrites ``v=k+1``. Never "latest": additive folds
+    are not idempotent, so if a crashed attempt wrote ``v=k+1`` before
+    its checkpoint commit, a replay reading latest would fold the
+    delta twice; anchoring to ``v=k`` makes the overwrite replay-safe
+    for every fold."""
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        state = read_table(batch.sparkSession, table_dir, version=batch_id)
+        step(state, batch).write.mode("overwrite").parquet(
+            f"{table_dir}/v={batch_id + 1}"
+        )
+
+    drain(stream, checkpoint_dir, fold)
+
+
 def run_cdc_apply(
     changes: DataFrame,
     table_dir: str,
@@ -82,8 +96,7 @@ def run_cdc_apply(
     compaction, same as the batch ``events_latest_per_key`` query —
     because ``merge_into`` joins one change row per key."""
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def step(base: DataFrame, batch: DataFrame) -> DataFrame:
         w = Window.partitionBy(change_key).orderBy(
             F.col(seq_col).desc(), F.col(change_key)
         )
@@ -92,12 +105,7 @@ def run_cdc_apply(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # Pre-batch snapshot (v=batch_id), not latest: merge_into is
-        # idempotent so latest would usually survive a replay, but
-        # anchoring to the batch's own base version makes the replay
-        # contract unconditional (same input -> same output snapshot).
-        base = read_table(spark, table_dir, version=batch_id)
-        merged = merge_into(
+        return merge_into(
             base,
             latest,
             key=key,
@@ -106,19 +114,8 @@ def run_cdc_apply(
             set_cols=set_cols,
             insert_defaults=insert_defaults,
         )
-        # version = 1 + batch_id: deterministic per batch, so a replay
-        # of the same batch overwrites its own snapshot (idempotent)
-        merged.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
 
-    (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_snapshots(changes, table_dir, checkpoint_dir, step)
 
 
 # ---------------------------------------------------------------------------
@@ -202,33 +199,13 @@ def run_agg_maintenance(
     sum_cols: list[str],
     checkpoint_dir: str,
 ) -> None:
-    """foreachBatch twin of run_cdc_apply for aggregates: each
-    micro-batch folds into its pre-batch snapshot (``v=batch_id``) and
-    writes ``v=batch_id + 1`` (idempotent per batch_id — a replay folds
-    into the same base and overwrites the same ``v=`` dir instead of
-    double-applying the delta)."""
+    """foreachBatch twin of run_cdc_apply for aggregates
+    (``_drain_snapshots``: each micro-batch folds into its pre-batch
+    snapshot and writes the next version)."""
+    def step(state: DataFrame, batch: DataFrame) -> DataFrame:
+        return combine_agg_state(state, batch, keys, sum_cols)
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # Read the PRE-batch snapshot explicitly (v=batch_id), never the
-        # latest: additive folds are not idempotent, so if the previous
-        # attempt crashed after writing v=batch_id+1 but before the
-        # checkpoint commit, a replay reading "latest" would fold the
-        # delta twice. Anchoring the base to batch_id makes the
-        # overwrite of v=batch_id+1 truly replay-safe.
-        state = read_table(spark, table_dir, version=batch_id)
-        new_state = combine_agg_state(state, batch, keys, sum_cols)
-        new_state.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
-
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_snapshots(changes, table_dir, checkpoint_dir, step)
 
 
 # ---------------------------------------------------------------------------
@@ -237,10 +214,7 @@ def run_agg_maintenance(
 # textbook mergeable sketch — max per (group, bucket) is associative,
 # commutative AND idempotent, so the maintained state is bit-identical
 # to recomputing the sketch over all items ever seen, at O(|delta| +
-# m·|groups|) per refresh. Unlike the additive aggregate fold above,
-# a replayed delta cannot even in principle corrupt the state (max is
-# idempotent); the pre-batch snapshot anchoring is still used so the
-# version chain stays deterministic.
+# m·|groups|) per refresh.
 # ---------------------------------------------------------------------------
 
 
@@ -264,30 +238,18 @@ def run_hll_maintenance(
 ) -> None:
     """foreachBatch maintenance of per-group HLL registers: each
     micro-batch sketches its items and max-merges into the pre-batch
-    snapshot (v=batch_id → v=batch_id+1, same replay contract as
-    run_agg_maintenance). Estimates come from the batch
+    snapshot (``_drain_snapshots``). Estimates come from the batch
     ``operators.sketches.hll_estimate`` over any snapshot — identical
     to sketching the full history in one pass."""
     from codex_data_products_spark.operators.sketches import (
         hll_register_rows,
     )
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def step(state: DataFrame, batch: DataFrame) -> DataFrame:
         delta = hll_register_rows(batch, item_col, keys)
-        state = read_table(spark, table_dir, version=batch_id)
-        new_state = combine_hll_state(state, delta, keys)
-        new_state.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
+        return combine_hll_state(state, delta, keys)
 
-    (
-        items.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_snapshots(items, table_dir, checkpoint_dir, step)
 
 
 # ---------------------------------------------------------------------------
@@ -299,8 +261,7 @@ def run_hll_maintenance(
 # delete is n = -1). Each refresh probes the delta against the BASE
 # sides — O(|Δ|·fanout), never a base-to-base rejoin — which at 100 TB
 # with both bases bucketed on the join key is a shuffle-free lookup of
-# only the changed keys. The same versioned-snapshot + pre-batch-
-# anchoring contract as run_agg_maintenance makes replays exact.
+# only the changed keys.
 # ---------------------------------------------------------------------------
 
 
@@ -356,11 +317,24 @@ def run_join_maintenance(
     delta-join into the pre-batch snapshots and writes v=batch_id+1
     of all three tables."""
 
+    def joined(x: DataFrame, y: DataFrame) -> DataFrame:
+        return (
+            x.alias("x")
+            .join(y.alias("y"), key)
+            .select(
+                key,
+                "a_val",
+                "b_val",
+                (F.col("x.n") * F.col("y.n")).alias("n"),
+            )
+        )
+
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        a_state = read_table(spark, f"{table_dir}/A", version=batch_id)
-        b_state = read_table(spark, f"{table_dir}/B", version=batch_id)
-        v_state = read_table(spark, f"{table_dir}/V", version=batch_id)
+        a_state, b_state, v_state = (
+            read_table(spark, f"{table_dir}/{t}", version=batch_id)
+            for t in "ABV"
+        )
         d_a = (
             batch.filter(F.col("side") == "A")
             .groupBy(key, "a_val")
@@ -372,55 +346,21 @@ def run_join_maintenance(
             .agg(F.sum("op").cast("long").alias("n"))
         )
         d_v = (
-            d_a.alias("da")
-            .join(b_state.alias("b"), key)
-            .select(
-                key,
-                "a_val",
-                "b_val",
-                (F.col("da.n") * F.col("b.n")).alias("n"),
+            joined(d_a, b_state)
+            .unionByName(joined(a_state, d_b))
+            .unionByName(joined(d_a, d_b))
+        )
+        new_state = {
+            "A": _fold_counts(a_state, d_a, [key, "a_val"]),
+            "B": _fold_counts(b_state, d_b, [key, "b_val"]),
+            "V": _fold_counts(v_state, d_v, [key, "a_val", "b_val"]),
+        }
+        for t, frame in new_state.items():
+            frame.write.mode("overwrite").parquet(
+                f"{table_dir}/{t}/v={batch_id + 1}"
             )
-            .unionByName(
-                a_state.alias("a")
-                .join(d_b.alias("db"), key)
-                .select(
-                    key,
-                    "a_val",
-                    "b_val",
-                    (F.col("a.n") * F.col("db.n")).alias("n"),
-                )
-            )
-            .unionByName(
-                d_a.alias("da")
-                .join(d_b.alias("db"), key)
-                .select(
-                    key,
-                    "a_val",
-                    "b_val",
-                    (F.col("da.n") * F.col("db.n")).alias("n"),
-                )
-            )
-        )
-        new_a = _fold_counts(a_state, d_a, [key, "a_val"])
-        new_b = _fold_counts(b_state, d_b, [key, "b_val"])
-        new_v = _fold_counts(v_state, d_v, [key, "a_val", "b_val"])
-        new_a.write.mode("overwrite").parquet(
-            f"{table_dir}/A/v={batch_id + 1}"
-        )
-        new_b.write.mode("overwrite").parquet(
-            f"{table_dir}/B/v={batch_id + 1}"
-        )
-        new_v.write.mode("overwrite").parquet(
-            f"{table_dir}/V/v={batch_id + 1}"
-        )
 
-    (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(changes, checkpoint_dir, apply_batch)
 
 
 # ---------------------------------------------------------------------------
@@ -475,32 +415,18 @@ def run_topk_maintenance(
 ) -> None:
     """foreachBatch maintenance of a top-k view over an insert stream.
 
-    Pre-batch snapshot anchoring (v=batch_id → v=batch_id+1) as in
-    run_agg_maintenance; here a replayed batch cannot corrupt state
-    even without it (top-k of a union is idempotent in the batch), but
-    anchoring keeps the version chain deterministic. Each refresh sorts
-    k + |batch-top-k| rows — never the history."""
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        state = read_table(spark, table_dir, version=batch_id)
+    Pre-batch snapshot anchoring (``_drain_snapshots``); here a
+    replayed batch cannot corrupt state even without it (top-k of a
+    union is idempotent in the batch), but anchoring keeps the version
+    chain deterministic. Each refresh sorts k + |batch-top-k| rows —
+    never the history."""
+    def step(state: DataFrame, batch: DataFrame) -> DataFrame:
         # cut the batch to its own top-k FIRST (TakeOrdered, no global
         # sort), then merge with the k-row state
         batch_topk = bootstrap_topk_state(batch, k, score_col, tie_cols)
-        new_state = combine_topk_state(
-            state, batch_topk, k, score_col, tie_cols
-        )
-        new_state.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
+        return combine_topk_state(state, batch_topk, k, score_col, tie_cols)
 
-    q = (
-        inserts.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_snapshots(inserts, table_dir, checkpoint_dir, step)
 
 
 # ---------------------------------------------------------------------------
@@ -511,9 +437,6 @@ def run_topk_maintenance(
 # the maintained state is bit-identical to recomputing over all
 # vectors ever ingested — the whitening/normalization stats an
 # embedding pipeline needs fresh without rescanning 100 TB of vectors.
-# Same replay contract as run_agg_maintenance: additive folds are not
-# idempotent, so each batch folds into its explicit pre-batch snapshot
-# (v=batch_id) and overwrites v=batch_id+1.
 # ---------------------------------------------------------------------------
 
 
@@ -569,24 +492,11 @@ def run_moment_maintenance(
 ) -> None:
     """foreachBatch maintenance of the per-dimension moment table:
     each micro-batch's partial moments fold into the pre-batch
-    snapshot (v=batch_id → v=batch_id+1, replay-safe overwrite)."""
+    snapshot (``_drain_snapshots``)."""
+    def step(state: DataFrame, batch: DataFrame) -> DataFrame:
+        return combine_moment_state(state, moment_rows(batch, vec_col))
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        delta = moment_rows(batch, vec_col)
-        state = read_table(spark, table_dir, version=batch_id)
-        new_state = combine_moment_state(state, delta)
-        new_state.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
-
-    q = (
-        vectors.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_snapshots(vectors, table_dir, checkpoint_dir, step)
 
 
 # ---------------------------------------------------------------------------
@@ -685,26 +595,11 @@ def run_profile_maintenance(
 ) -> None:
     """foreachBatch maintenance of the column-profile multiset: each
     micro-batch stacks to signed profile rows and folds into the
-    pre-batch snapshot (v=batch_id -> v=batch_id+1; the additive fold
-    is replay-safe only because the base is anchored, same contract as
-    run_agg_maintenance)."""
+    pre-batch snapshot (``_drain_snapshots``)."""
+    def step(state: DataFrame, batch: DataFrame) -> DataFrame:
+        return combine_profile_state(state, profile_rows(batch, cols, op_col))
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        delta = profile_rows(batch, cols, op_col)
-        state = read_table(spark, table_dir, version=batch_id)
-        new_state = combine_profile_state(state, delta)
-        new_state.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
-
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_snapshots(changes, table_dir, checkpoint_dir, step)
 
 
 # ---------------------------------------------------------------------------
@@ -716,9 +611,7 @@ def run_profile_maintenance(
 # instead of a full-table ANALYZE. The state is the bounded
 # width-W bucket grain (|max/W| rows regardless of table size); the
 # fold is additive signed counts (op = +1/-1), so retractions restore
-# the exact prior histogram and the pre-batch snapshot anchoring makes
-# crash replays overwrite the same version with identical state —
-# the same contract as run_agg_maintenance.
+# the exact prior histogram.
 # ---------------------------------------------------------------------------
 
 
@@ -820,22 +713,9 @@ def run_histogram_maintenance(
 ) -> None:
     """foreachBatch maintenance of the bucket-grain histogram state:
     each micro-batch folds signed bucket deltas into the PRE-BATCH
-    snapshot (v=batch_id -> v=batch_id+1), so a replayed batch
-    overwrites its own version instead of double-counting."""
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    snapshot (``_drain_snapshots``)."""
+    def step(state: DataFrame, batch: DataFrame) -> DataFrame:
         delta = histogram_rows(batch, value_col, width, op_col)
-        state = read_table(spark, table_dir, version=batch_id)
-        new_state = combine_histogram_state(state, delta)
-        new_state.write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id + 1}"
-        )
+        return combine_histogram_state(state, delta)
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_snapshots(changes, table_dir, checkpoint_dir, step)

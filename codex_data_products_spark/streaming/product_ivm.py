@@ -30,10 +30,8 @@ any corpus size):
     a block-local one (the product keeps the pre-join ``varm_raw``
     relation for exactly this).
 
-State layout under ``<product>/_state`` (versioned ``v=<k>`` snapshots,
-same anchoring contract as every maintainer in ``streaming.merge``:
-batch k reads v=k, writes v=k+1, so a foreachBatch replay re-derives
-identical snapshots):
+State layout under ``<product>/_state`` (versioned ``v=<k>`` snapshots;
+replay contract: ``streaming.logstate``):
 
   * ``ds_channels/v=<k>`` — (dataset, channel, n_rows): surviving
     channels per dataset with x_long row counts. var = distinct
@@ -101,13 +99,10 @@ from codex_data_products_spark.plans.codex_pipeline import (
     write_commit_marker,
     write_product,
 )
+from codex_data_products_spark.streaming.logstate import drain
 from codex_data_products_spark.streaming.merge import read_table
 
 _PARTITIONED = ("x_long", "obs", "edges")  # dataset-partitioned tables
-_DS_CHANNELS_SCHEMA = "dataset string, channel string, n_rows long"
-_DS_STATS_SCHEMA = (
-    "dataset string, hubmap_id string, n_cells long, n_edges long"
-)
 
 
 def _state_root(out_dir: str) -> str:
@@ -499,8 +494,8 @@ def run_product_maintenance(
     checkpoint_dir: str,
     **build_kwargs,
 ) -> None:
-    """availableNow foreachBatch drain of a release-change stream onto
-    the maintained product. ``changes`` rows: (op string in
+    """``logstate.drain`` of a release-change stream onto the
+    maintained product. ``changes`` rows: (op string in
     {'add','remove','refresh'}, dataset string) — 'refresh' is the
     metadata-only delta class (``apply_metadata_refresh``). A batch is
     either a release batch (add/remove) or a metadata batch (refresh),
@@ -508,10 +503,6 @@ def run_product_maintenance(
     in one batch_id would break the v=k → v=k+1 anchoring. The
     per-batch collect is catalog-grain (releases touch a handful of
     datasets), bounded by design.
-
-    Standard replay contract: a batch anchored to v=batch_id overwrites
-    v=batch_id+1 and its own partitions, so a crash between the commit
-    marker and the checkpoint commit re-derives the same snapshot.
     """
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -546,13 +537,7 @@ def run_product_maintenance(
             **build_kwargs,
         )
 
-    (
-        changes.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(changes, checkpoint_dir, fold)
 
 
 # ---------------------------------------------------------------------------

@@ -19,14 +19,14 @@ gram flips at most once (the corpus is append-only), so across the
 whole history each old doc is repaired O(#flips touching it) times —
 delta-proportional in aggregate.
 
-State layout under ``state_dir`` (every table is an append log with
-the package-standard ``batch=<k>`` / ``compact=<c>`` contracts; batch
-k reads strictly below itself and overwrites only its own dirs, so a
-foreachBatch replay re-derives identical snapshots):
+State layout under ``state_dir`` (every table is a
+``streaming.logstate`` log; batch k reads strictly below itself and
+overwrites only its own dirs):
 
-  * ``grams/batch=<k>``    — APPEND-ONLY positional gram rows
-    (doc_id, n, pos, g) for the batch's docs. O(|delta|) write. The
-    corpus-scale table; only ever scanned + broadcast-semi-joined.
+  * ``grams/batch=<k>``    — positional gram rows (doc_id, n, pos, g)
+    for the batch's docs, with ``grams_removed/batch=<k>`` removal
+    tombstones. The corpus-scale table; only ever scanned +
+    broadcast-semi-joined.
   * ``occ_delta/batch=<k>``— (g, occ) the batch's OWN gram counts —
     an append-log of the additive fold's deltas (round 9: the former
     ``occ/v=<k>`` full-histogram rewrite was the engine's last
@@ -39,12 +39,11 @@ foreachBatch replay re-derives identical snapshots):
     AQE broadcasts the small side; at bulk-load fractions (the bench's
     modulo-3 batches touch ~1/3 of the corpus vocabulary) it degrades
     to a hash join rather than shipping a 10⁶-row broadcast.
-  * ``coverage/batch=<k>`` — APPEND-ONLY per-doc coverage rows first
-    computed by batch k, with ``coverage_removed/batch=<k>`` doc
-    tombstones for the flip repair (strict tombstone rule shared with
-    the pair logs: a tombstone kills rows from strictly earlier
-    batches, so the same-batch re-emit survives). Compactable with
-    ``compact_pair_log``'s machinery via ``compact_substring_coverage``.
+  * ``coverage/batch=<k>`` — per-doc coverage rows first computed by
+    batch k, with ``coverage_removed/batch=<k>`` doc tombstones for the
+    flip repair (the same-batch re-emit survives them).
+  * ``_FORMAT_V2_GRAM_LONG`` — the state format marker
+    (``logstate._check_state_format``).
 
 Invariants (tests/test_streaming.py): after any sequence of insert
 batches with fresh doc_ids, ``substring_coverage_snapshot`` equals the
@@ -61,8 +60,6 @@ its shuffle-partitionable equivalent — see queries/dedup.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,11 +67,19 @@ from codex_data_products_spark.queries.dedup import (
     _coverage_per_doc,
     positional_grams,
 )
-from codex_data_products_spark.streaming.dedup_ivm import (
+from codex_data_products_spark.streaming.logstate import (
+    _check_state_format,
+    _compact_floor,
+    _compact_log,
+    _delete,
     _empty,
     _gc_log_dirs,
     _log_union,
     _remove_frame,
+    _tombstoned_log,
+    _write_batch,
+    _write_tombstones,
+    drain,
 )
 
 _GRAMS_SCHEMA = "doc_id long, n int, pos int, g long"
@@ -87,7 +92,8 @@ _OCC_SCHEMA = "g long, occ long, b int"
 _COVERAGE_SCHEMA = (
     "doc_id long, n_tokens long, dup_tokens long, dup_fraction double"
 )
-_REMOVED_SCHEMA = "doc_id long"
+_LOGS = ("coverage", "grams", "occ_delta")  # the compaction-tracked logs
+
 # Bucket-set pruning gate (round 11, session 3): with D distinct grams
 # the expected number of UNTOUCHED buckets is 64·(1−1/64)^D — already
 # < 1e-4 at D ≈ 1000 — so past a few thousand delta gram rows the
@@ -95,63 +101,23 @@ _REMOVED_SCHEMA = "doc_id long"
 # driver-side heuristic skips it outright (VERDICT r10 #4 follow-up;
 # the count is a sub-second scan of the already-materialized delta
 # cache, the collect it replaces is a whole extra aggregate job).
-# Production deltas that genuinely probe few grams stay well under the
-# default; conf-able for clusters with different bucket counts.
-_PRUNE_COLLECT_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SUBSTR_PRUNE_MAX_ROWS", "65536")
-)
-# State format version (ADVICE r11): round 11 changed the persisted gram
-# key (g: hex string -> binary(16) -> xxhash64 long) and the occ log's
-# bucket column derives from it — resuming a state dir written under an
-# older format would fail at parquet read at best, or silently never
-# match old grams against new keys in a mixed log at worst. The marker
-# file pins the format; a state dir with gram/occ history but NO marker
-# fails fast with a re-bootstrap message instead.
-_FORMAT_MARKER = "_FORMAT_V2_GRAM_LONG"
-
-
-def _check_state_format(spark: SparkSession, state_dir: str) -> None:
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    marker = Path(f"{state_dir}/{_FORMAT_MARKER}")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(marker):
-        return
-    for sub in ("grams", "occ_delta"):
-        if fs.exists(Path(f"{state_dir}/{sub}")):
-            raise RuntimeError(
-                f"substring state at {state_dir} predates the long-gram-key "
-                "format (round 11: g long = xxhash64(token window), occ log "
-                "bucketed by pmod(xxhash64(g), 64)) — old and new gram keys "
-                "never match, so resuming would silently corrupt coverage. "
-                "Re-bootstrap the state from the source corpus."
-            )
-    # fresh dir (caller skipped bootstrap): stamp it now
-    fs.createNewFile(marker)
+# Production deltas that genuinely probe few grams stay well under it.
+_PRUNE_COLLECT_MAX_ROWS = 65536
 
 
 def bootstrap_substring_state(spark: SparkSession, state_dir: str) -> None:
     """Write the empty-corpus anchors (an existing corpus is just a
     big first batch; the occ-delta log starts as an absent root —
     ``_log_union`` reads absence as empty) and the state format marker
-    (see ``_check_state_format``)."""
-    _empty(spark, _COVERAGE_SCHEMA).write.mode("overwrite").parquet(
-        f"{state_dir}/coverage/batch=0"
+    (``logstate._check_state_format``)."""
+    _write_batch(
+        _empty(spark, _COVERAGE_SCHEMA), f"{state_dir}/coverage", 0
     )
     _check_state_format(spark, state_dir)
 
 
 def _occ_bucket(col):
     return F.pmod(F.xxhash64(col), F.lit(_N_OCC_BUCKETS)).cast("int")
-
-
-def _clear_dir(spark: SparkSession, path: str) -> None:
-    """Remove a log dir a replaying batch would otherwise have
-    overwritten — keeps the skip-empty-tombstone write idempotent over
-    a crashed older attempt's leftovers (driver-side fs call only)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        fs.delete(jvm_path, True)
 
 
 def occ_log_slice(
@@ -190,26 +156,11 @@ def _prior_grams(
     spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame:
     """Positional gram rows of every SURVIVING doc from batches before
-    this one (compaction-aware via ``_log_union``; the current batch's
-    own dir is excluded so a crashed attempt's leftovers never
-    double-count on replay). Removal tombstones apply under the
-    standard strictly-older rule — a re-added doc's rows from a later
-    batch survive its earlier tombstone; the tombstone aggregate is
-    release-grain and broadcasts, the gram log streams."""
-    rows = _log_union(
-        spark, f"{state_dir}/grams", _GRAMS_SCHEMA, upto=batch_id - 1
-    )
-    rem = _log_union(
-        spark,
-        f"{state_dir}/grams_removed",
-        _REMOVED_SCHEMA,
-        upto=batch_id - 1,
-    )
-    rmax = rem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-    return (
-        rows.join(F.broadcast(rmax), "doc_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb", "log_batch")
+    this one (the current batch's own dir is excluded so a crashed
+    attempt's leftovers never double-count on replay)."""
+    grams = f"{state_dir}/grams"
+    return _tombstoned_log(
+        spark, grams, f"{grams}_removed", _GRAMS_SCHEMA, batch_id - 1
     )
 
 
@@ -222,12 +173,8 @@ def apply_substring_batch(
     """Fold one batch (NEW documents + optional removals — an id list
     or a one-column DataFrame; the DataFrame form keeps bulk
     retractions fully distributed, no driver collect) into the
-    maintained coverage state: read the logs strictly below this
-    batch, write only this batch's own log dirs. A combined add+remove
-    batch is an atomic replace per the shared contract
-    (``streaming.dedup_ivm.COMBINED_BATCH_CONTRACT``): removes prune
-    the PRE-batch state only, the delta's own rows survive the batch's
-    tombstones.
+    maintained coverage state. A combined add+remove batch is an
+    atomic replace per ``streaming.logstate.COMBINED_BATCH_CONTRACT``.
 
     Removals (round 9): a removed doc's grams DECREMENT the occ fold —
     the occ-delta log simply carries the batch's NET per-gram counts,
@@ -286,19 +233,15 @@ def apply_substring_batch(
     #       eager localCheckpoint whose plan folds the status-changed
     #       gram set in as a broadcast — the former flow paid separate
     #       jobs for the changed checkpoint, its isEmpty probe, and the
-    #       affected fill. An insert-only batch writes NO tombstone dir
-    #       (round 11): _log_union reads absence as empty, the delete
-    #       keeps replay over an older attempt's leftovers idempotent.
+    #       affected fill.
     def _write_grams() -> None:
-        delta.write.mode("overwrite").parquet(
-            f"{state_dir}/grams/batch={batch_id}"
+        _write_batch(delta, f"{state_dir}/grams", batch_id)
+        _write_tombstones(
+            spark,
+            rem_df if has_removes else None,
+            f"{state_dir}/grams_removed",
+            batch_id,
         )
-        if has_removes:
-            rem_df.coalesce(1).write.mode("overwrite").parquet(
-                f"{state_dir}/grams_removed/batch={batch_id}"
-            )
-        else:
-            _clear_dir(spark, f"{state_dir}/grams_removed/batch={batch_id}")
 
     def _discover():
         # the candidate occ aggregate prunes its log scan to the
@@ -363,17 +306,17 @@ def apply_substring_batch(
         return occ_old_cand, affected
 
     def _write_occ() -> None:
-        (
+        _write_batch(
             net_occ.filter(F.col("net") != 0)
             .select(
                 "g",
                 F.col("net").alias("occ"),
                 _occ_bucket(F.col("g")).alias("b"),
             )
-            .repartition("b")  # one writer task per populated bucket dir
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(f"{state_dir}/occ_delta/batch={batch_id}")
+            .repartition("b"),  # one writer task per populated bucket dir
+            f"{state_dir}/occ_delta",
+            batch_id,
+            partition_by="b",
         )
 
     # the occ-delta write depends only on net_occ (cached by whichever
@@ -388,16 +331,13 @@ def apply_substring_batch(
         occ_fut.result()
     has_repair = not affected.isEmpty()
 
-    # -- 3. PHASE 2+commit, three concurrent lanes: the occ-delta and
-    #       tombstone writes depend only on phase-1 state, so they
-    #       start immediately and overlap the coverage lane, which
-    #       still has the repair slice to materialize. All writes are
-    #       independent (disjoint own-batch dirs, upstream state
-    #       persisted) — the commit costs the slowest lane, not the
-    #       sum; crash-safety is unchanged because a replay overwrites
-    #       every dir it would have written. A no-repair, no-remove
-    #       batch writes no coverage tombstone dir at all (absence ==
-    #       empty, as above).
+    # -- 3. PHASE 2+commit, two concurrent lanes: the tombstone write
+    #       depends only on phase-1 state, so it starts immediately and
+    #       overlaps the coverage lane, which still has the repair
+    #       slice to materialize. Both writes are independent (disjoint
+    #       own-batch dirs, upstream state persisted) — the commit
+    #       costs the slowest lane, not the sum. A no-repair, no-remove
+    #       batch writes no coverage tombstone dir at all.
     #
     #       Coverage lane: duplicated positions of the recompute set
     #       (the delta plus the affected old docs) under the NEW
@@ -475,17 +415,17 @@ def apply_substring_batch(
         cov_rows = _coverage_per_doc(
             r_pos.join(F.broadcast(dup_r), "g", "left_semi")
         )
-        cov_rows.write.mode("overwrite").parquet(
-            f"{state_dir}/coverage/batch={batch_id + 1}"
-        )
+        _write_batch(cov_rows, f"{state_dir}/coverage", batch_id + 1)
 
     def _write_tombs() -> None:
         if has_repair or has_removes:
-            affected.unionByName(rem_df).distinct().write.mode(
-                "overwrite"
-            ).parquet(f"{state_dir}/coverage_removed/batch={batch_id + 1}")
+            _write_batch(
+                affected.unionByName(rem_df).distinct(),
+                f"{state_dir}/coverage_removed",
+                batch_id + 1,
+            )
         else:
-            _clear_dir(
+            _delete(
                 spark, f"{state_dir}/coverage_removed/batch={batch_id + 1}"
             )
 
@@ -513,19 +453,10 @@ def substring_coverage_snapshot(
     """The maintained view: per-doc duplicated-span coverage — equal to
     ``dedup_substring`` recomputed from scratch over every document
     ingested up to ``version``. Assembled from the append-only coverage
-    log minus the flip-repair tombstones; the log streams through one
-    broadcast tombstone join, never shuffles."""
-    rows = _log_union(
-        spark, f"{state_dir}/coverage", _COVERAGE_SCHEMA, version
-    )
-    rem = _log_union(
-        spark, f"{state_dir}/coverage_removed", _REMOVED_SCHEMA, version
-    )
-    rmax = rem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-    return (
-        rows.join(F.broadcast(rmax), "doc_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb", "log_batch")
+    log minus the flip-repair tombstones."""
+    cov = f"{state_dir}/coverage"
+    return _tombstoned_log(
+        spark, cov, f"{cov}_removed", _COVERAGE_SCHEMA, version
     )
 
 
@@ -533,10 +464,8 @@ def compact_substring_coverage(
     spark: SparkSession, state_dir: str, upto: int, gc: bool = True
 ) -> None:
     """Collapse the coverage log's history through batch ``upto`` into
-    one ``compact=<upto>`` dir (same crash-safe ``_SUCCESS``-gated
-    protocol as ``compact_pair_log``; applied tombstones drop). The
-    gram log is compacted too — it carries no tombstones, so its
-    consolidation is a plain re-label union.
+    its compact floor (``streaming.logstate``). The gram log and the
+    occ-delta log are compacted too.
 
     The two logs are keyed on OFFSET numbering: batch k appends
     ``grams/batch=<k>`` but ``coverage/batch=<k+1>`` (coverage batch 0
@@ -547,80 +476,33 @@ def compact_substring_coverage(
     and silently lose every prior gram, breaking 1 -> >=2 occurrence-
     flip repairs of old docs, while permanently shadowing the NEXT
     batch's own ``grams/batch=<upto>`` dir."""
-    snap = substring_coverage_snapshot(
-        spark, state_dir, version=upto
-    ).localCheckpoint()
-    snap.write.mode("overwrite").parquet(
-        f"{state_dir}/coverage/compact={upto}"
-    )
-    snap.unpersist()
-    if upto >= 1:
-        # gram consolidation applies the removal tombstones (<= its
-        # own floor) so they can be GC'd with the superseded dirs —
-        # same protocol as compact_pair_log; a tombstone from a LATER
-        # batch still kills floor rows through the strictly-older rule
-        grams_rows = _log_union(
-            spark, f"{state_dir}/grams", _GRAMS_SCHEMA, upto=upto - 1
-        )
-        grem = _log_union(
-            spark,
-            f"{state_dir}/grams_removed",
-            _REMOVED_SCHEMA,
-            upto=upto - 1,
-        )
-        grmax = grem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-        grams = (
-            grams_rows.join(F.broadcast(grmax), "doc_id", "left")
-            .filter(
-                F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch"))
-            )
-            .drop("rb", "log_batch")
-            .localCheckpoint()
-        )
-        grams.write.mode("overwrite").parquet(
-            f"{state_dir}/grams/compact={upto - 1}"
-        )
-        grams.unpersist()
-        # the occ-delta log shares the gram log's keying (batch k
-        # writes occ_delta/batch=<k>) — consolidate its history into
-        # one summed histogram at the same floor. This is the ONE
-        # place the corpus-wide occurrence counts materialize, at
-        # compaction cadence, never per batch.
-        occ = (
-            _log_union(
-                spark,
-                f"{state_dir}/occ_delta",
-                _OCC_SCHEMA,
-                upto=upto - 1,
-            )
-            .groupBy("g", "b")  # b is functionally dependent on g
-            .agg(F.sum("occ").cast("long").alias("occ"))
-            .select("g", "occ", "b")
-            .localCheckpoint()
-        )
-        (
-            occ.repartition("b")
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(f"{state_dir}/occ_delta/compact={upto - 1}")
-        )
-        occ.unpersist()
+    cov, grams, occ = (f"{state_dir}/{t}" for t in _LOGS)
+    _compact_log(spark, cov, f"{cov}_removed", _COVERAGE_SCHEMA, upto)
     if gc:
-        _gc_log_dirs(
-            spark,
-            (f"{state_dir}/coverage", f"{state_dir}/coverage_removed"),
-            upto,
-        )
-        if upto >= 1:
-            _gc_log_dirs(
-                spark,
-                (
-                    f"{state_dir}/grams",
-                    f"{state_dir}/grams_removed",
-                    f"{state_dir}/occ_delta",
-                ),
-                upto - 1,
-            )
+        _gc_log_dirs(spark, (cov, f"{cov}_removed"), upto)
+    if upto < 1:
+        return
+    # gram consolidation applies the removal tombstones (<= its own
+    # floor) so they can be GC'd with the superseded dirs; a tombstone
+    # from a LATER batch still kills floor rows
+    _compact_log(spark, grams, f"{grams}_removed", _GRAMS_SCHEMA, upto - 1)
+    # the occ-delta log shares the gram log's keying (batch k writes
+    # occ_delta/batch=<k>) — consolidate its history into one summed
+    # histogram at the same floor. This is the ONE place the
+    # corpus-wide occurrence counts materialize, at compaction
+    # cadence, never per batch.
+    _compact_floor(
+        _log_union(spark, occ, _OCC_SCHEMA, upto=upto - 1)
+        .groupBy("g", "b")  # b is functionally dependent on g
+        .agg(F.sum("occ").cast("long").alias("occ"))
+        .select("g", "occ", "b"),
+        occ,
+        upto - 1,
+        partition_by="b",
+        repartition=True,
+    )
+    if gc:
+        _gc_log_dirs(spark, (grams, f"{grams}_removed", occ), upto - 1)
 
 
 def run_substring_maintenance(
@@ -629,32 +511,14 @@ def run_substring_maintenance(
     checkpoint_dir: str,
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain of a document stream onto the
-    maintained coverage view — standard replay contract (a crash
-    between state write and checkpoint commit re-derives identical
-    snapshots, since every write is keyed by the batch id). Log
-    compaction is ratio-triggered per batch
-    (``dedup_ivm.compaction_due``; None disables)."""
-    from codex_data_products_spark.streaming.dedup_ivm import (
-        compaction_due,
-    )
+    """``logstate.drain`` of a document stream onto the maintained
+    coverage view, compacting when ``compaction_due`` (None disables)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         apply_substring_batch(batch, state_dir, batch_id)
-        if auto_compact_ratio is not None and compaction_due(
-            batch.sparkSession,
-            state_dir,
-            ("grams", "occ_delta", "coverage"),
-            auto_compact_ratio,
-        ):
-            compact_substring_coverage(
-                batch.sparkSession, state_dir, upto=batch_id + 1
-            )
 
-    (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_substring_coverage(spark, state_dir, upto=batch_id + 1)
+
+    auto = (state_dir, _LOGS, auto_compact_ratio, compact)
+    drain(docs, checkpoint_dir, fold, auto)

@@ -7,7 +7,7 @@ doc_ids per batch — the same contract the substring maintainer's
 insert path uses): term frequency sums, and document frequency sums
 because each batch's distinct (term, doc) pairs are disjoint from
 every earlier batch's. So the state is two append-logs of per-batch
-partial aggregates:
+partial aggregates (``streaming.logstate`` logs):
 
   tf_delta/batch=<k>   (lang, term, tf)  — the batch's NET term
                                            counts (negative under
@@ -28,8 +28,7 @@ removal batch receives doc_ids only and re-derives the retracted
 counts from the log slice (broadcast semi-join; the log streams).
 The snapshot folds the delta logs with term-grain aggregates —
 vocabulary-sized, not corpus-sized — and ranks; compaction
-consolidates the history into one summed floor per log (the
-``compact=`` protocol shared with every maintainer here). The top-V
+consolidates the history into one summed floor per log. The top-V
 rank itself stays a read-time operation: maintaining a materialized
 top-V under inserts would need the full histogram anyway (an item can
 enter the top from arbitrarily far below), and the histogram IS the
@@ -41,17 +40,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from codex_data_products_spark.streaming.dedup_ivm import (
+from codex_data_products_spark.streaming.logstate import (
+    _compact_floor,
+    _compact_log,
     _gc_log_dirs,
     _log_union,
     _remove_frame,
+    _tombstoned_log,
+    _write_batch,
     _write_tombstones,
+    drain,
 )
 
 _TF_SCHEMA = "lang string, term string, tf long"
 _DF_SCHEMA = "term string, df long"
 _TOK_SCHEMA = "doc_id long, lang string, term string, n long"
-_REMOVED_SCHEMA = "doc_id long"
 
 
 def _tok(docs: DataFrame) -> DataFrame:
@@ -66,22 +69,13 @@ def _tok_log(
     spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame:
     """(doc_id, lang, term, n) of every SURVIVING doc from batches
-    before this one (strictly-older tombstone rule; the log streams
-    through one broadcast join)."""
-    rows = _log_union(
-        spark, f"{state_dir}/tok_log", _TOK_SCHEMA, upto=batch_id - 1
-    )
-    rem = _log_union(
+    before this one."""
+    return _tombstoned_log(
         spark,
+        f"{state_dir}/tok_log",
         f"{state_dir}/tok_removed",
-        _REMOVED_SCHEMA,
-        upto=batch_id - 1,
-    )
-    rmax = rem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-    return (
-        rows.join(F.broadcast(rmax), "doc_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb", "log_batch")
+        _TOK_SCHEMA,
+        batch_id - 1,
     )
 
 
@@ -94,24 +88,19 @@ def apply_vocab_batch(
     """Fold one batch (NEW documents + optional removals — an id list
     or a one-column DataFrame; the DataFrame form keeps bulk
     retractions fully distributed, no driver collect) into the
-    vocabulary state: delta-sized appends only, replay-safe (a
-    crashed batch overwrites its own dirs). A removal re-derives the
-    retracted per-term counts from the doc-grain token log — negative
-    tf/df entries in the same delta logs the adds use. Removes apply
-    to the state BEFORE this batch (the retraction slice reads the
-    strictly-earlier token log), so a doc_id in both this batch's
-    adds and removes is an atomic replace per the shared contract
-    (``streaming.dedup_ivm.COMBINED_BATCH_CONTRACT``): the old counts
-    retract, the new counts land, and the strictly-older tombstone
-    rule keeps the same-batch token-log row alive for any LATER
-    removal to retract."""
+    vocabulary state: delta-sized appends only. A removal re-derives
+    the retracted per-term counts from the doc-grain token log —
+    negative tf/df entries in the same delta logs the adds use. A
+    doc_id in both adds and removes is an atomic replace per
+    ``streaming.logstate.COMBINED_BATCH_CONTRACT``: the old counts
+    retract, the new counts land."""
     spark = batch_docs.sparkSession
     rem_df, has_removes = _remove_frame(spark, remove)
     _write_tombstones(
         spark,
-        rem_df,
-        has_removes,
-        f"{state_dir}/tok_removed/batch={batch_id}",
+        rem_df if has_removes else None,
+        f"{state_dir}/tok_removed",
+        batch_id,
     )
 
     per_doc = (
@@ -120,9 +109,7 @@ def apply_vocab_batch(
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .persist()
     )
-    per_doc.write.mode("overwrite").parquet(
-        f"{state_dir}/tok_log/batch={batch_id}"
-    )
+    _write_batch(per_doc, f"{state_dir}/tok_log", batch_id)
     rem_rows = _tok_log(spark, state_dir, batch_id).join(
         F.broadcast(rem_df), "doc_id", "left_semi"
     )
@@ -131,23 +118,23 @@ def apply_vocab_batch(
             "doc_id", "lang", "term", (-F.col("n")).alias("n")
         )
     )
-    (
+    _write_batch(
         signed.groupBy("lang", "term")
         .agg(F.sum("n").cast("long").alias("tf"))
-        .filter(F.col("tf") != 0)
-        .write.mode("overwrite")
-        .parquet(f"{state_dir}/tf_delta/batch={batch_id}")
+        .filter(F.col("tf") != 0),
+        f"{state_dir}/tf_delta",
+        batch_id,
     )
-    (
+    _write_batch(
         signed.groupBy("term")
         .agg(
             F.sum(F.signum(F.col("n")).cast("long"))
             .cast("long")
             .alias("df")
         )
-        .filter(F.col("df") != 0)
-        .write.mode("overwrite")
-        .parquet(f"{state_dir}/df_delta/batch={batch_id}")
+        .filter(F.col("df") != 0),
+        f"{state_dir}/df_delta",
+        batch_id,
     )
     per_doc.unpersist()
     rem_df.unpersist()  # localCheckpoint blocks (DataFrame removes)
@@ -188,48 +175,27 @@ def vocab_snapshot(
 def compact_vocab_state(
     spark: SparkSession, state_dir: str, upto: int, gc: bool = True
 ) -> None:
-    """Consolidate both logs through batch ``upto`` into summed
-    ``compact=<upto>`` floors (``_SUCCESS``-gated, superseded dirs
-    GC'd — the shared protocol)."""
+    """Consolidate both delta logs through batch ``upto`` into summed
+    compact floors, and the token log into its tombstone-filtered
+    floor (``streaming.logstate``)."""
     for root, schema, keys in (
         (f"{state_dir}/tf_delta", _TF_SCHEMA, ["lang", "term"]),
         (f"{state_dir}/df_delta", _DF_SCHEMA, ["term"]),
     ):
         col = schema.split(",")[-1].strip().split()[0]
-        snap = (
+        _compact_floor(
             _log_union(spark, root, schema, upto)
             .groupBy(*keys)
-            .agg(F.sum(col).cast("long").alias(col))
-            .localCheckpoint()
-        )
-        snap.write.mode("overwrite").parquet(f"{root}/compact={upto}")
-        snap.unpersist()
-        if gc:
-            _gc_log_dirs(spark, (root,), upto)
-    # the doc-grain token log consolidates with its tombstones applied
-    # (strictly-older rule preserved for later removals via floor
-    # relabeling — same protocol as the gram-log compactor)
-    rows = _log_union(spark, f"{state_dir}/tok_log", _TOK_SCHEMA, upto)
-    rem = _log_union(
-        spark, f"{state_dir}/tok_removed", _REMOVED_SCHEMA, upto
-    )
-    rmax = rem.groupBy("doc_id").agg(F.max("log_batch").alias("rb"))
-    tok = (
-        rows.join(F.broadcast(rmax), "doc_id", "left")
-        .filter(F.col("rb").isNull() | (F.col("rb") <= F.col("log_batch")))
-        .drop("rb", "log_batch")
-        .localCheckpoint()
-    )
-    tok.write.mode("overwrite").parquet(
-        f"{state_dir}/tok_log/compact={upto}"
-    )
-    tok.unpersist()
-    if gc:
-        _gc_log_dirs(
-            spark,
-            (f"{state_dir}/tok_log", f"{state_dir}/tok_removed"),
+            .agg(F.sum(col).cast("long").alias(col)),
+            root,
             upto,
         )
+        if gc:
+            _gc_log_dirs(spark, (root,), upto)
+    tok, tok_removed = f"{state_dir}/tok_log", f"{state_dir}/tok_removed"
+    _compact_log(spark, tok, tok_removed, _TOK_SCHEMA, upto)
+    if gc:
+        _gc_log_dirs(spark, (tok, tok_removed), upto)
 
 
 def run_vocab_maintenance(
@@ -238,29 +204,15 @@ def run_vocab_maintenance(
     checkpoint_dir: str,
     auto_compact_ratio: float | None = 1.0,
 ) -> None:
-    """availableNow foreachBatch drain onto the maintained vocabulary
-    (standard replay contract). Log compaction is ratio-triggered per
-    batch (``dedup_ivm.compaction_due``; None disables)."""
-    from codex_data_products_spark.streaming.dedup_ivm import (
-        compaction_due,
-    )
+    """``logstate.drain`` onto the maintained vocabulary, compacting
+    when ``compaction_due`` (None disables)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         apply_vocab_batch(batch, state_dir, batch_id)
-        if auto_compact_ratio is not None and compaction_due(
-            batch.sparkSession,
-            state_dir,
-            ("tok_log", "tf_delta", "df_delta"),
-            auto_compact_ratio,
-        ):
-            compact_vocab_state(
-                batch.sparkSession, state_dir, upto=batch_id
-            )
 
-    (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def compact(spark: SparkSession, batch_id: int) -> None:
+        compact_vocab_state(spark, state_dir, upto=batch_id)
+
+    tables = ("tok_log", "tf_delta", "df_delta")
+    auto = (state_dir, tables, auto_compact_ratio, compact)
+    drain(docs, checkpoint_dir, fold, auto)

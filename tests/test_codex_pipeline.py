@@ -352,3 +352,42 @@ def test_build_product_tissue_lookup_fallback(spark, bundle):
     }
     assert tissues == {DS_A: "Spleen", DS_B: "Kidney"}
     assert looked_up == [DS_B]  # dict hit short-circuits the lookup
+
+
+def test_read_product_table_keeps_all_digit_dataset_uuids(
+    spark, bundle, tmp_path
+):
+    """Partition-type inference must not retype ``dataset``: a product
+    whose dataset uuids are all digits reads them back unchanged,
+    leading zeros included, from every dataset-partitioned table."""
+    import shutil
+
+    from codex_data_products_spark.plans.codex_pipeline import (
+        read_product_table,
+    )
+
+    digits = {DS_A: "0" * 29 + "123", DS_B: "0" * 29 + "456"}
+    root = tmp_path / "digit_bundle"
+    shutil.copytree(bundle, root)
+    tsv = (root / "uuids.tsv").read_text()
+    for old, new in digits.items():
+        os.rename(root / "data" / old, root / "data" / new)
+        tsv = tsv.replace(old, new)
+    (root / "uuids.tsv").write_text(tsv)
+    prod = build_product(
+        spark,
+        str(root / "data"),
+        str(root / "uuids.tsv"),
+        tissue="Spleen",
+        decoder=fake_decoder,
+        product_uuid="digit-product-uuid",
+        creation_time="2026-01-01 00:00:00",
+    )
+    out = str(tmp_path / "digit_product")
+    write_product(prod, out)
+    for table in ("x_long", "obs", "edges"):
+        got = read_product_table(spark, out, table).select("dataset")
+        assert dict(got.dtypes)["dataset"] == "string", table
+        assert {r["dataset"] for r in got.distinct().collect()} == set(
+            digits.values()
+        ), table

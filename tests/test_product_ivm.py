@@ -202,9 +202,8 @@ def test_time_travel_reads_previous_snapshot(spark, bundle, maintained):
         .distinct()
         .collect()
     }
-    # partition-column type inference parses the all-digit stress uuids
-    # as ints (pre-existing layout behavior) — compare value-wise
-    assert obs_ds == {str(int(u)) for u in want_ds}
+    # the all-digit stress uuids read back unchanged, leading zeros kept
+    assert obs_ds == set(want_ds)
     # DS[5] (added in batch 2) is invisible at version 2
     x = read_product_table(spark, out, "x_long", version=2)
     assert x.filter(f"dataset = '{DS[5]}'").count() == 0

@@ -1826,6 +1826,48 @@ def test_substring_ivm_flip_repairs_old_doc(spark, tmp_path):
     assert _substr_ivm(spark, state, version=1) == set()
 
 
+def test_substring_state_format_marker(spark, tmp_path):
+    """The substring state dir carries a format marker: bootstrap stamps
+    it, a dir holding gram history WITHOUT it fails fast naming the
+    missing marker and how to stamp it, and a stamped dir resumes."""
+    import os
+
+    import pytest as _pytest
+
+    from codex_data_products_spark.streaming.substring_ivm import (
+        apply_substring_batch,
+        bootstrap_substring_state,
+    )
+
+    shared = "a b c d e f g h i j"
+    b0 = spark.createDataFrame(
+        [(1, shared + " u1 u2 u3 u4")], "doc_id long, text string"
+    )
+    b1 = spark.createDataFrame(
+        [(2, shared + " w1 w2 w3 w4 w5")], "doc_id long, text string"
+    )
+    state = str(tmp_path / "substr_marker")
+    marker = os.path.join(state, "_FORMAT_V2_GRAM_LONG")
+    bootstrap_substring_state(spark, state)
+    assert os.path.isfile(marker)
+    apply_substring_batch(b0, state, 0)
+    assert os.path.isdir(os.path.join(state, "grams"))
+
+    os.remove(marker)
+    with _pytest.raises(RuntimeError) as err:
+        apply_substring_batch(b1, state, 1)
+    msg = str(err.value)
+    assert "no format marker" in msg and marker in msg
+    assert "predates" not in msg
+
+    open(marker, "w").close()  # the stamp the message asks for
+    apply_substring_batch(b1, state, 1)
+    assert _substr_ivm(spark, state) == {
+        (1, 14, 10, 0.714286),
+        (2, 15, 10, 0.666667),
+    }
+
+
 def test_substring_ivm_replay_and_compaction(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
@@ -2127,7 +2169,7 @@ def test_substring_ivm_occ_log_is_delta_sized_and_sums_to_histogram(
     from pyspark.sql import functions as F
 
     from codex_data_products_spark.queries.dedup import positional_grams
-    from codex_data_products_spark.streaming.dedup_ivm import _log_union
+    from codex_data_products_spark.streaming.logstate import _log_union
     from codex_data_products_spark.streaming.substring_ivm import (
         apply_substring_batch,
         bootstrap_substring_state,
@@ -2491,7 +2533,7 @@ def test_remove_frame_rejects_ambiguous_multicolumn_frame(spark):
     arbitrary column to removal ids and corrupt tombstones."""
     import pytest as _pytest
 
-    from codex_data_products_spark.streaming.dedup_ivm import (
+    from codex_data_products_spark.streaming.logstate import (
         _remove_frame,
     )
 

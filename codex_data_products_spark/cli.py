@@ -2,13 +2,15 @@
 invoke (CWL wraps ``concatenate.py`` / ``make_uuids_tsv.py`` as CLIs;
 steps/concatenate.cwl:5-8). Subcommands:
 
-  product   — build + write the CODEX data product
-              (reference: bin/concatenate.py main())
+  product   — build + write the CODEX data product, maintainable by
+              product-delta (reference: bin/concatenate.py main());
+              product-bootstrap is an alias
+  product-delta / fleet-delta — one O(delta) release batch on a
+              written product / on every tissue product of a fleet
   catalog   — build the uuids catalog TSV from recorded search hits
               (reference: make_uuids_tsv.py main())
   curate    — run the training-data curation pipeline over a corpus
   query     — run any registered query and write/show the result
-  bench     — alias of bench.py for installed contexts
 
 Every subcommand builds one SparkSession via the engine factory, so
 cluster configuration comes from the usual spark-submit/env knobs.
@@ -39,27 +41,6 @@ def _cmd_product(args: argparse.Namespace) -> int:
         creation_time=args.creation_time,
     )
     manifest = write_product(product, args.out)
-    json.dump(manifest, sys.stdout, indent=2)
-    print()
-    return 0
-
-
-def _cmd_product_bootstrap(args: argparse.Namespace) -> int:
-    from codex_data_products_spark.plans.codex_pipeline import build_product
-    from codex_data_products_spark.streaming.product_ivm import (
-        bootstrap_product_maintenance,
-    )
-
-    spark = get_spark(app_name="codex-product-bootstrap")
-    product = build_product(
-        spark,
-        args.data_dir,
-        args.uuids_tsv,
-        tissue=args.tissue,
-        product_uuid=args.product_uuid,
-        creation_time=args.creation_time,
-    )
-    manifest = bootstrap_product_maintenance(product, args.out)
     json.dump(manifest, sys.stdout, indent=2)
     print()
     return 0
@@ -275,7 +256,12 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="codex-data-products-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    pp = sub.add_parser("product", help="build the CODEX data product")
+    pp = sub.add_parser(
+        "product",
+        aliases=["product-bootstrap"],
+        help="build + write the CODEX data product (snapshot v=0 with its "
+        "maintenance state, ready for product-delta)",
+    )
     pp.add_argument("--data-dir", required=True)
     pp.add_argument("--uuids-tsv", required=True)
     pp.add_argument("--tissue", default=None)
@@ -284,22 +270,10 @@ def main(argv: list[str] | None = None) -> int:
     pp.add_argument("--creation-time", default=None)
     pp.set_defaults(fn=_cmd_product)
 
-    pb = sub.add_parser(
-        "product-bootstrap",
-        help="build + write the product AND the v=0 maintenance state",
-    )
-    pb.add_argument("--data-dir", required=True)
-    pb.add_argument("--uuids-tsv", required=True)
-    pb.add_argument("--tissue", default=None)
-    pb.add_argument("--out", required=True)
-    pb.add_argument("--product-uuid", default=None)
-    pb.add_argument("--creation-time", default=None)
-    pb.set_defaults(fn=_cmd_product_bootstrap)
-
     pd = sub.add_parser(
         "product-delta",
         help="apply one O(delta) release batch (add/remove datasets) to a "
-        "maintained product",
+        "product written by `product`",
     )
     pd.add_argument("--out", required=True, help="maintained product dir")
     pd.add_argument("--data-dir", required=True)

@@ -25,7 +25,7 @@ import glob
 import json
 import os
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,6 +113,39 @@ def read_catalog(spark: SparkSession, uuids_tsv: str) -> DataFrame:
         if c and not c.startswith("Unnamed") and not c.startswith("_c")
     ]
     return df.select(*keep)
+
+
+def catalog_leaves(catalog: DataFrame, extra: tuple[str, ...] = ()) -> tuple:
+    """The catalog's rows (uuid, hubmap_id, ancestry, plus ``extra``
+    columns) and, in catalog order, its leaves — the processed datasets,
+    those with no descendants (F2, bin/concatenate.py:339-342). The
+    catalog is at most thousands of rows, collected like J2."""
+    rows = catalog.select(
+        "uuid", "hubmap_id", "immediate_ancestor_ids",
+        "immediate_descendant_ids", *extra,
+    ).collect()
+    return rows, [r for r in rows if r["immediate_descendant_ids"] is None]
+
+
+def product_uns(
+    datasets: list[tuple[str, str]], tissue: str | None,
+    product_uuid: str | None, creation_time: str | None,
+) -> dict:
+    """The product's ``uns`` metadata over ``datasets`` ((uuid,
+    hubmap_id) pairs in product order) — the one place the dict is
+    spelled, for full builds, fleet builds and delta commits."""
+    import uuid as uuidlib
+    from datetime import datetime
+
+    return {
+        "creation_data_time": creation_time or str(datetime.now()),
+        "uuid": product_uuid or str(uuidlib.uuid4()),
+        "datasets": [h for _, h in datasets],
+        "dataset_uuids": [u for u, _ in datasets],
+        "protocol": "https://github.com/hubmapconsortium/codex-data-products",
+        "epic_type": "analyses",
+        "tissue": tissue,
+    }
 
 
 def _dataset_parts(
@@ -321,17 +354,8 @@ def build_product(
     ``var`` (the cross-dataset channel axis) and ``varm_long`` (semi-
     joined against it) are block-relative; the maintainer re-derives
     both from its persisted per-dataset state."""
-    import uuid as uuidlib
-    from datetime import datetime
-
     catalog = read_catalog(spark, uuids_tsv)
-    cat_rows = catalog.select(
-        "uuid", "hubmap_id", "immediate_ancestor_ids", "immediate_descendant_ids"
-    ).collect()  # catalog ≤ thousands of rows: driver-side like J2
-
-    # F2: leaves = processed datasets (null descendants,
-    # bin/concatenate.py:339-342).
-    leaves = [r for r in cat_rows if r["immediate_descendant_ids"] is None]
+    cat_rows, leaves = catalog_leaves(catalog)
     if only_datasets is not None:
         known = {r["uuid"] for r in leaves}
         missing = [u for u in only_datasets if u not in known]
@@ -339,12 +363,11 @@ def build_product(
             raise ValueError(f"not leaf datasets in the catalog: {missing}")
         wanted = set(only_datasets)
         leaves = [r for r in leaves if r["uuid"] in wanted]
-    processed_uuids = [r["uuid"] for r in leaves]
-    processed_hbmids = [r["hubmap_id"] for r in leaves]
     ancestor_of = {r["uuid"]: r["immediate_ancestor_ids"] for r in cat_rows}
 
     parts = []
-    for ds in processed_uuids:
+    for r in leaves:
+        ds = r["uuid"]
         ds_tissue = tissue or (tissue_by_uuid or {}).get(ds)
         if ds_tissue is None and tissue_lookup is not None:
             ds_tissue = tissue_lookup(ds)
@@ -356,15 +379,10 @@ def build_product(
     if not parts:
         raise ValueError(f"no complete datasets found under {data_dir}")
 
-    uns = {
-        "creation_data_time": creation_time or str(datetime.now()),
-        "uuid": product_uuid or str(uuidlib.uuid4()),
-        "datasets": processed_hbmids,
-        "dataset_uuids": processed_uuids,
-        "protocol": "https://github.com/hubmapconsortium/codex-data-products",
-        "epic_type": "analyses",
-        "tissue": tissue,
-    }
+    uns = product_uns(
+        [(r["uuid"], r["hubmap_id"]) for r in leaves],
+        tissue, product_uuid, creation_time,
+    )
     return _assemble_product(spark, catalog, parts, uns)
 
 
@@ -400,15 +418,13 @@ def build_products(
     tissues into one product). ``creation_time`` defaults to ONE
     shared timestamp so the fleet's products are mutually
     consistent."""
-    import uuid as uuidlib
     from datetime import datetime
 
     catalog = read_catalog(spark, uuids_tsv)
     has_tissue_col = "tissue" in catalog.columns
-    cols = ["uuid", "hubmap_id", "immediate_ancestor_ids",
-            "immediate_descendant_ids"] + (["tissue"] if has_tissue_col else [])
-    cat_rows = catalog.select(*cols).collect()
-    leaves = [r for r in cat_rows if r["immediate_descendant_ids"] is None]
+    cat_rows, leaves = catalog_leaves(
+        catalog, ("tissue",) if has_tissue_col else ()
+    )
     ancestor_of = {r["uuid"]: r["immediate_ancestor_ids"] for r in cat_rows}
 
     def tissue_of(row) -> str | None:
@@ -444,16 +460,10 @@ def build_products(
             parts.append(p)
         if not parts:
             continue
-        uns = {
-            "creation_data_time": shared_time,
-            "uuid": (product_uuid_by_tissue or {}).get(t)
-            or str(uuidlib.uuid4()),
-            "datasets": [r["hubmap_id"] for r in rows],
-            "dataset_uuids": [r["uuid"] for r in rows],
-            "protocol": "https://github.com/hubmapconsortium/codex-data-products",
-            "epic_type": "analyses",
-            "tissue": t,
-        }
+        uns = product_uns(
+            [(r["uuid"], r["hubmap_id"]) for r in rows],
+            t, (product_uuid_by_tissue or {}).get(t), shared_time,
+        )
         products[t] = _assemble_product(spark, catalog, parts, uns)
     if not products:
         raise ValueError(f"no complete datasets found under {data_dir}")
@@ -488,6 +498,8 @@ PARTITIONED_TABLES = ("x_long", "obs", "edges")  # dataset-partitioned
 VERSIONED_TABLES = ("var", "varm_long")  # channel-grain, written at v=<k>
 COMMIT_MARKER = "_PRODUCT_COMMIT.json"
 COMMIT_DIR = "_commits"
+STATE_DIR = "_state"  # per-dataset maintenance state, <name>/v=<k>
+STATE_TABLES = ("ds_channels", "ds_stats", "ds_varm_raw")
 
 
 def _commit_path(out_dir: str, version: int) -> str:
@@ -495,14 +507,25 @@ def _commit_path(out_dir: str, version: int) -> str:
 
 
 def write_commit_marker(
-    out_dir: str, commit: dict, *, _fail_after: str | None = None
-) -> None:
-    """The commit point of the versioned snapshot protocol. ``commit``
-    is the full snapshot descriptor: uuid, version, dataset_uuids,
-    table_versions (var/varm_long), uns content, manifest content, and
-    per-table stats — everything a reader needs, so the marker rename is
-    the ONLY reader-visible transition (no live file is overwritten
-    before it).
+    out_dir: str,
+    uns: dict,
+    version: int,
+    table_versions: dict,
+    stats: dict,
+    files: dict,
+    *,
+    _fail_after: str | None = None,
+) -> dict:
+    """The commit step of the versioned snapshot protocol, the one place
+    a snapshot's K2 manifest (create_json, bin/concatenate.py:154-177)
+    and commit descriptor are built — for ``write_product`` (v=0) and
+    every maintenance batch (v=k+1) alike. The descriptor carries
+    everything a reader needs: uuid, version, dataset_uuids,
+    table_versions (var/varm_long), uns, manifest, per-table stats and
+    the file-level manifest ``files``, so the marker rename is the ONLY
+    reader-visible transition (no live file is overwritten before it).
+    The manifest's cell count is the stats' obs rows; its size is a
+    dict sum over exactly the committed files. Returns the manifest.
 
     Order: (1) the versioned commit file ``_commits/v=<k>.json``
     (invisible to readers — they resolve through the live marker); (2)
@@ -518,33 +541,67 @@ def write_commit_marker(
 
     ``_fail_after='commit_file'`` is the failure-injection seam between
     (1) and (2)."""
+    manifest = {
+        "Data Product UUID": uns["uuid"],
+        "Tissue": uns.get("tissue"),
+        "Assay": "codex",
+        "Creation Time": uns["creation_data_time"],
+        "Dataset UUIDs": uns["dataset_uuids"],
+        "Dataset HBMIDs": uns["datasets"],
+        "Total Cell Count": stats["obs"]["rows"],
+        "Raw File Size": _files_size(files),
+    }
+    commit = {
+        "uuid": uns["uuid"],
+        "version": version,
+        "tables": list(PRODUCT_TABLES),
+        "dataset_uuids": list(uns["dataset_uuids"]),
+        "table_versions": table_versions,
+        "uns": uns,
+        "manifest": manifest,
+        "stats": stats,
+        "files": files,
+    }
     os.makedirs(os.path.join(out_dir, COMMIT_DIR), exist_ok=True)
-    write_json_atomic(_commit_path(out_dir, commit["version"]), commit)
+    write_json_atomic(_commit_path(out_dir, version), commit)
     if _fail_after == "commit_file":
         raise RuntimeError("injected crash after commit_file")
     tmp = os.path.join(out_dir, f".{COMMIT_MARKER}.tmp")
     with open(tmp, "w") as f:
         json.dump(commit, f)
     os.replace(tmp, os.path.join(out_dir, COMMIT_MARKER))  # COMMIT POINT
-    write_json_atomic(os.path.join(out_dir, "uns.json"), commit["uns"])
-    write_json_atomic(
-        os.path.join(out_dir, f"{commit['uuid']}.json"), commit["manifest"]
-    )
+    write_json_atomic(os.path.join(out_dir, "uns.json"), uns)
+    write_json_atomic(os.path.join(out_dir, f"{uns['uuid']}.json"), manifest)
+    return manifest
+
+
+def _load_commit(path: str) -> dict:
+    """One commit file, refused unless it names its data files: every
+    read, carry-forward and GC resolves through that file-level
+    manifest, so a marker without one cannot be served."""
+    with open(path) as f:
+        commit = json.load(f)
+    if "files" not in commit:
+        raise ValueError(
+            f"{path} has no file-level manifest ('files'): the product "
+            "predates that commit format — rebuild it with write_product"
+        )
+    return commit
 
 
 def read_commit_marker(out_dir: str, version: int | None = None) -> dict:
     """The committed snapshot descriptor — live by default, or any
     retained historical version (time travel). Raise if the product was
-    never committed (or a write crashed before its commit point), or if
-    ``version`` was never committed / already expired."""
+    never committed (or a write crashed before its commit point), if
+    ``version`` was never committed / already expired, or if the commit
+    lacks its file-level manifest."""
     path = os.path.join(out_dir, COMMIT_MARKER)
     if not os.path.exists(path):
         raise FileNotFoundError(
             f"{out_dir} has no {COMMIT_MARKER}: product is uncommitted "
             "(a build crashed mid-write, or never ran) — re-run the build"
         )
-    with open(path) as f:
-        live = json.load(f)
+    live = _load_commit(path)
     if version is None or version == live["version"]:
         return live
     if version > live["version"]:
@@ -559,74 +616,74 @@ def read_commit_marker(out_dir: str, version: int | None = None) -> dict:
             f"version {version} has been expired (retention GC) — "
             "raise keep_last on expire_snapshots to retain more history"
         )
-    with open(vpath) as f:
-        return json.load(f)
+    return _load_commit(vpath)
 
 
-def _read_dataset_partitioned(
-    spark: SparkSession, base: str, paths: list[str]
+def _read_files(
+    spark: SparkSession,
+    out_dir: str,
+    table: str,
+    per_ds: dict,
+    datasets: list[str],
 ) -> DataFrame:
-    """Read a ``dataset=``-partitioned table with ``dataset`` as a
-    string. Spark infers partition column types, so a product whose
-    dataset uuids are all digits would read ``dataset`` back as a
-    number with its leading zeros gone. When inference typed it as
-    anything but a string, re-read with the inferred schema and
-    ``dataset`` pinned to string: a given schema takes the raw
-    directory value. The session-wide inference conf stays on, since
-    every other partitioned read in the engine relies on it."""
+    """A dataset-partitioned table read from exactly the files ``per_ds``
+    (``{dataset: [[relpath, size], ...]}``) names for ``datasets`` —
+    planning-time file selection, so files no commit references (a
+    crashed append attempt's orphans) are never listed.
+
+    ``dataset`` reads as a string. Spark infers partition column types,
+    so a product whose dataset uuids are all digits would read
+    ``dataset`` back as a number with its leading zeros gone. When
+    inference typed it as anything but a string, re-read with the
+    inferred schema and ``dataset`` pinned to string: a given schema
+    takes the raw directory value. The session-wide inference conf stays
+    on, since every other partitioned read in the engine relies on it."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    df = spark.read.option("basePath", base).parquet(*paths)
-    if isinstance(df.schema["dataset"].dataType, StringType):
-        return df
-    schema = StructType(
-        [
-            StructField("dataset", StringType()) if f.name == "dataset" else f
-            for f in df.schema.fields
-        ]
-    )
-    return spark.read.option("basePath", base).schema(schema).parquet(*paths)
+    base = f"{out_dir}/{table}"
+    paths = [
+        os.path.join(out_dir, rel)
+        for ds in datasets
+        for rel, _ in per_ds.get(ds, [])
+    ]
+    # no files: the directory footer gives the schema, no row is read
+    src = paths or [base]
+    reader = spark.read.option("basePath", base)
+    df = reader.parquet(*src)
+    if not isinstance(df.schema["dataset"].dataType, StringType):
+        schema = StructType(
+            [
+                StructField("dataset", StringType()) if f.name == "dataset" else f
+                for f in df.schema.fields
+            ]
+        )
+        df = reader.schema(schema).parquet(*src)
+    return df if paths else df.filter(F.lit(False))
 
 
 def read_product_table(
     spark: SparkSession, out_dir: str, table: str, version: int | None = None
 ) -> DataFrame:
     """Committed read: resolve the snapshot through the marker first.
-    Dataset-partitioned tables are filtered to the snapshot's COMMITTED
-    dataset list (partition pruning, not a row filter — a partition
+    Dataset-partitioned tables load exactly the files the snapshot's
+    file-level manifest names for its committed datasets (a partition
     written by an in-flight maintenance batch that hasn't reached its
     commit point is invisible); the channel-grain axis tables read the
     snapshot's pinned ``v=<k>`` directory, so a delta batch writing
     ``v=k+1`` never disturbs a committed (or historical) read.
 
-    Time travel (``version=k``) is EXACT for every table since round 9:
-    the commit records its file-level manifest, partitioned reads load
-    exactly those files (delta batches APPEND new files — they never
-    overwrite a committed file), so a dataset removed then re-added
-    reads its era-correct bytes at every version. Retention
-    (``expire_snapshots``) bounds how far back reads go.
+    Time travel (``version=k``) is exact for every table: delta batches
+    APPEND new files — they never overwrite a committed file — so a
+    dataset removed then re-added reads its era-correct bytes at every
+    version. Retention (``expire_snapshots``) bounds how far back reads
+    go.
     """
     marker = read_commit_marker(out_dir, version)
     if table in PARTITIONED_TABLES:
-        base = f"{out_dir}/{table}"
-        per_ds = marker.get("files", {}).get(table)
-        if per_ds is not None:
-            paths = [
-                os.path.join(out_dir, rel)
-                for ds in marker["dataset_uuids"]
-                for rel, _ in per_ds.get(ds, [])
-            ]
-            if paths:
-                return _read_dataset_partitioned(spark, base, paths)
-            # the snapshot references NO files for this table: schema
-            # from the directory footer, zero rows — never the dir scan
-            # (which could surface a crashed append attempt's orphans)
-            return _read_dataset_partitioned(spark, base, [base]).filter(
-                F.lit(False)
-            )
-        # legacy pre-file-manifest marker
-        df = _read_dataset_partitioned(spark, base, [base])
-        return df.filter(F.col("dataset").isin(marker["dataset_uuids"]))
+        return _read_files(
+            spark, out_dir, table, marker["files"][table],
+            marker["dataset_uuids"],
+        )
     tv = marker["table_versions"][table]
     return spark.read.parquet(f"{out_dir}/{table}/v={tv}")
 
@@ -665,31 +722,6 @@ def _list_files(base: str, rel_to: str) -> list[list]:
     return sorted(out)
 
 
-def snapshot_files(out_dir: str, marker: dict) -> dict:
-    """The commit's file-level manifest — ``{table: {dataset: [[relpath,
-    size], ...]}}`` for the dataset-partitioned tables plus ``{table:
-    [[relpath, size], ...]}`` for the pinned axis versions. Read from
-    the marker (every commit since round 9 records it — the Iceberg
-    move: the snapshot IS its file list); synthesized by directory
-    listing for a legacy pre-round-9 marker."""
-    if "files" in marker:
-        return marker["files"]
-    files: dict = {}
-    for t in PARTITIONED_TABLES:
-        files[t] = {
-            ds: _list_files(
-                os.path.join(out_dir, t, f"dataset={ds}"), out_dir
-            )
-            for ds in marker["dataset_uuids"]
-        }
-    for t in VERSIONED_TABLES:
-        files[t] = _list_files(
-            os.path.join(out_dir, t, f"v={marker['table_versions'][t]}"),
-            out_dir,
-        )
-    return files
-
-
 def _files_size(files: dict) -> int:
     """Manifest 'Raw File Size' as a pure dict sum over the commit's
     file-level manifest — no os.walk at read time, and exactly the
@@ -707,10 +739,10 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
     """Retention-based GC (the Iceberg/Delta 'expire snapshots' step,
     replacing GC-at-commit): keep the newest ``keep_last`` committed
     snapshots and delete everything no retained snapshot references —
-    dataset partitions, axis-table versions, maintenance-state versions
-    and commit files. Because the previous snapshot stays whole until
-    expiry, a reader that resolved the marker before a delta committed
-    can finish its scan without losing files mid-read.
+    dataset partition files, axis-table versions, maintenance-state
+    versions and commit files. Because the previous snapshot stays
+    whole until expiry, a reader that resolved the marker before a
+    delta committed can finish its scan without losing files mid-read.
 
     Single-writer: call from the maintenance writer (post-commit), never
     concurrently with an in-flight batch — an uncommitted batch's
@@ -731,51 +763,37 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
     markers = [read_commit_marker(out_dir, v) for v in retained]
     removed: dict = {"partitions": [], "files": [], "axis_versions": [],
                      "commits": [], "state_versions": []}
-    # file-grain GC (round 9): delete exactly the data files no
-    # retained snapshot's manifest references — a file shared by two
-    # retained snapshots (the common case: an untouched dataset)
-    # survives because EVERY referencing commit names it. Legacy
-    # markers without a file manifest fall back to the partition-grain
-    # rule (delete dataset dirs absent from every retained snapshot).
-    all_filed = all("files" in m for m in markers)
-    if all_filed:
-        referenced: set[str] = set()
-        for m in markers:
-            for t in PARTITIONED_TABLES:
-                for entries in m["files"].get(t, {}).values():
-                    referenced.update(rel for rel, _ in entries)
+    # file-grain GC: delete exactly the data files no retained
+    # snapshot's manifest references — a file shared by two retained
+    # snapshots (the common case: an untouched dataset) survives
+    # because EVERY referencing commit names it
+    referenced: set[str] = set()
+    for m in markers:
         for t in PARTITIONED_TABLES:
-            base = os.path.join(out_dir, t)
-            if not os.path.isdir(base):
-                continue
-            for dp, _, fns in os.walk(base):
-                for fn in fns:
-                    if fn.startswith(("_", ".")):
-                        continue
-                    rel = os.path.relpath(os.path.join(dp, fn), out_dir)
-                    if rel not in referenced:
-                        os.remove(os.path.join(dp, fn))
-                        removed["files"].append(rel)
-            # prune partition dirs emptied of data files
-            for d in sorted(os.listdir(base)):
-                pdir = os.path.join(base, d)
-                if d.startswith("dataset=") and os.path.isdir(pdir) and not any(
-                    not fn.startswith(("_", "."))
-                    for _, _, fns in os.walk(pdir)
-                    for fn in fns
-                ):
-                    shutil.rmtree(pdir, ignore_errors=True)
-                    removed["partitions"].append(f"{t}/{d}")
-    else:
-        keep_ds = set().union(*[set(m["dataset_uuids"]) for m in markers])
-        for t in PARTITIONED_TABLES:
-            base = os.path.join(out_dir, t)
-            if not os.path.isdir(base):
-                continue
-            for d in os.listdir(base):
-                if d.startswith("dataset=") and d[len("dataset="):] not in keep_ds:
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-                    removed["partitions"].append(f"{t}/{d}")
+            for entries in m["files"].get(t, {}).values():
+                referenced.update(rel for rel, _ in entries)
+    for t in PARTITIONED_TABLES:
+        base = os.path.join(out_dir, t)
+        if not os.path.isdir(base):
+            continue
+        for dp, _, fns in os.walk(base):
+            for fn in fns:
+                if fn.startswith(("_", ".")):
+                    continue
+                rel = os.path.relpath(os.path.join(dp, fn), out_dir)
+                if rel not in referenced:
+                    os.remove(os.path.join(dp, fn))
+                    removed["files"].append(rel)
+        # prune partition dirs emptied of data files
+        for d in sorted(os.listdir(base)):
+            pdir = os.path.join(base, d)
+            if d.startswith("dataset=") and os.path.isdir(pdir) and not any(
+                not fn.startswith(("_", "."))
+                for _, _, fns in os.walk(pdir)
+                for fn in fns
+            ):
+                shutil.rmtree(pdir, ignore_errors=True)
+                removed["partitions"].append(f"{t}/{d}")
     for t in VERSIONED_TABLES:
         base = os.path.join(out_dir, t)
         keep_v = {m["table_versions"][t] for m in markers}
@@ -791,7 +809,7 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
             removed["commits"].append(v)
     # state v=k is the input that replays batch k (which commits k+1):
     # keep versions >= the oldest retained snapshot's version
-    state_root = os.path.join(out_dir, "_state")
+    state_root = os.path.join(out_dir, STATE_DIR)
     if os.path.isdir(state_root) and retained:
         floor = min(retained)
         for name in os.listdir(state_root):
@@ -806,10 +824,10 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
 def derive_product_state(product: CodexProduct) -> dict[str, DataFrame]:
     """The per-dataset maintenance-state relations (channel×dataset
     grain — tiny at any corpus size), derived from the product frames.
-    Used at bootstrap (full build) and per delta (block build) by the
-    incremental maintainer, so the maintained state is the same function
-    of the same code path — and used by ``write_product`` to derive the
-    commit-time table stats.
+    ``write_product`` and the maintainer's add batches call it on the
+    tables as written (``written_tables``), so the state, and the
+    commit stats folded from it, are the committed bytes' — never a
+    re-run of the lazy build.
 
       * ``ds_channels`` (dataset, channel, n_rows): surviving channels
         per dataset with their x_long row counts — var = distinct
@@ -853,6 +871,46 @@ def derive_product_state(product: CodexProduct) -> dict[str, DataFrame]:
         "ds_stats": ds_stats,
         "ds_varm_raw": varm_raw,
     }
+
+
+def written_tables(
+    product: CodexProduct, out_dir: str, files: dict
+) -> CodexProduct:
+    """``product`` with its dataset-partitioned tables replaced by the
+    files just written for its datasets (``files``: ``{table: {dataset:
+    [[relpath, size], ...]}}``), read through the committed-read path.
+    Whatever derives from the result scans parquet, so no HDF5 source is
+    decoded again. ``varm_raw`` stays the build's relation: it is never
+    written as a table, and its plan reads only antibodies TSVs and CSV
+    headers."""
+    spark = product.x_long.sparkSession
+    datasets = product.uns["dataset_uuids"]
+
+    def read(table: str) -> DataFrame:
+        return _read_files(spark, out_dir, table, files[table], datasets)
+
+    return replace(
+        product,
+        x_long=read("x_long"),
+        obs=read("obs"),
+        edges=read("edges") if product.edges is not None else None,
+    )
+
+
+def write_product_state(
+    out_dir: str, version: int, state: dict[str, DataFrame]
+) -> dict[str, DataFrame]:
+    """Persist the three maintenance-state relations at
+    ``_state/<name>/v=<version>`` (overwrite — a replayed batch rewrites
+    its own version) and return them read back, so everything computed
+    afterwards (axis tables, commit stats) folds the persisted rows."""
+    spark = state["ds_channels"].sparkSession
+    out = {}
+    for name in STATE_TABLES:
+        path = os.path.join(out_dir, STATE_DIR, name, f"v={version}")
+        state[name].write.mode("overwrite").parquet(path)
+        out[name] = spark.read.parquet(path)
+    return out
 
 
 def _col_stats(df: DataFrame, col: str, weight: str | None = None) -> dict:
@@ -928,35 +986,41 @@ def write_product(
     out_dir: str,
     *,
     _fail_after: str | None = None,
-    stats: dict | None = None,
 ) -> dict:
-    """K1 + K2: parquet product directory + manifest, committed with the
-    marker-LAST protocol: tables (axis tables at their versioned v=0
-    paths) → commit marker carrying uns + manifest + stats. A crash at
-    any point leaves no marker, so readers (through
-    ``read_product_table``) refuse the half-product, and a re-run
-    converges — every table write is mode=overwrite.
+    """K1 + K2: commit ``product`` as snapshot version 0 of a new product
+    directory — parquet tables, the v=0 maintenance state, then the
+    commit marker carrying uns + manifest + stats + file list. Returns
+    the manifest.
 
-    x_long/obs/edges partitioned by dataset → partition pruning for
-    per-dataset consumers AND O(delta) incremental maintenance
-    (streaming/product_ivm.py); var/varm_long are channel-grain tables
-    written at ``v=0`` so delta batches can commit ``v=k`` snapshots
-    without ever overwriting a committed reader's files.
+    Layout: x_long/obs/edges partitioned by dataset (partition pruning
+    for per-dataset consumers, O(delta) maintenance); var/varm_long are
+    channel-grain tables at ``v=0``, so later snapshots commit ``v=k``
+    beside them without overwriting a committed reader's files.
 
-    Bootstrap writer: writes snapshot version 0 into a NEW directory.
-    Re-running over a LIVE committed product is not reader-safe (the
-    partitioned tables are overwritten in place) — evolve a committed
-    product through ``apply_product_delta`` instead.
+    State and stats come from the tables as written: the dataset-
+    partitioned tables are read back from exactly the files just listed
+    (``written_tables``), their per-dataset state is persisted at
+    ``_state/<name>/v=0`` (``write_product_state``), and the commit
+    stats fold that state and the written ``varm_long/v=0``. Each HDF5
+    source is decoded once per table write and never for the stats, and
+    every written product can be evolved by
+    ``streaming.product_ivm.apply_product_delta`` as it is.
 
-    ``stats`` lets a caller that already derived the maintenance state
-    (``bootstrap_product_maintenance``) pass the commit stats in instead
-    of re-running the state aggregation; ``_fail_after`` is the
-    failure-injection seam for the atomicity test."""
+    Marker-last: a crash at any point leaves no marker, so committed
+    reads refuse the half-product, and a re-run converges (every write
+    overwrites). Write into a new directory — re-running over a live
+    committed product is not reader-safe (the partitioned tables are
+    overwritten in place).
+
+    ``_fail_after`` ∈ {x_long, obs, tables, state, manifest,
+    commit_file} is the failure-injection seam for the atomicity
+    test."""
 
     def _checkpoint(step: str) -> None:
         if _fail_after == step:
             raise RuntimeError(f"injected crash after {step}")
 
+    spark = product.x_long.sparkSession
     os.makedirs(out_dir, exist_ok=True)
     product.x_long.write.mode("overwrite").partitionBy("dataset").parquet(
         f"{out_dir}/x_long"
@@ -976,54 +1040,37 @@ def write_product(
         )
     _checkpoint("tables")
 
-    if stats is None:
-        state = derive_product_state(product)
-        stats = product_stats_from_state(
-            state["ds_channels"], state["ds_stats"], product.varm_long
-        )
-    table_versions = {"var": 0, "varm_long": 0}
     # file-level manifest (the Iceberg move, VERDICT r8 #3): the commit
     # names its exact data files, so historical reads, GC and the size
     # sum all resolve by file reference, not directory membership
-    datasets = list(product.uns["dataset_uuids"])
     files: dict = {
         t: {
             ds: _list_files(os.path.join(out_dir, t, f"dataset={ds}"), out_dir)
-            for ds in datasets
+            for ds in product.uns["dataset_uuids"]
         }
         for t in PARTITIONED_TABLES
     }
     for t in VERSIONED_TABLES:
         files[t] = _list_files(os.path.join(out_dir, t, "v=0"), out_dir)
-    # K2 manifest (create_json, bin/concatenate.py:154-177): cell count
-    # from the commit stats; file size over exactly the committed files.
-    manifest = {
-        "Data Product UUID": product.uns["uuid"],
-        "Tissue": product.uns.get("tissue"),
-        "Assay": "codex",
-        "Creation Time": product.uns["creation_data_time"],
-        "Dataset UUIDs": product.uns["dataset_uuids"],
-        "Dataset HBMIDs": product.uns["datasets"],
-        "Total Cell Count": stats["obs"]["rows"],
-        "Raw File Size": _files_size(files),
-    }
+    state = write_product_state(
+        out_dir, 0, derive_product_state(written_tables(product, out_dir, files))
+    )
+    _checkpoint("state")
+    stats = product_stats_from_state(
+        state["ds_channels"],
+        state["ds_stats"],
+        spark.read.parquet(f"{out_dir}/varm_long/v=0"),
+    )
     _checkpoint("manifest")
-    write_commit_marker(
+    return write_commit_marker(
         out_dir,
-        {
-            "uuid": product.uns["uuid"],
-            "version": 0,
-            "tables": list(PRODUCT_TABLES),
-            "dataset_uuids": datasets,
-            "table_versions": table_versions,
-            "uns": product.uns,
-            "manifest": manifest,
-            "stats": stats,
-            "files": files,
-        },
+        product.uns,
+        0,
+        {"var": 0, "varm_long": 0},
+        stats,
+        files,
         _fail_after=_fail_after,
     )
-    return manifest
 
 
 def wide_matrix(product: CodexProduct, layer: str = "total") -> DataFrame:

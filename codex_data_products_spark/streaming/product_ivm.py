@@ -8,6 +8,12 @@ This maintainer replaces that with O(delta) per release: adding or
 removing a dataset touches ONLY that dataset's partitions plus the
 channel-grain axis tables.
 
+Every written product is maintainable: ``plans.codex_pipeline.
+write_product`` commits snapshot v=0 together with its v=0 state, so
+``apply_product_delta`` runs on any committed product as it is
+(``bootstrap_product_maintenance`` is the same function under its
+older name).
+
 Why this decomposes cleanly: every row-scale product table is
 per-dataset-pure —
 
@@ -30,8 +36,9 @@ any corpus size):
     a block-local one (the product keeps the pre-join ``varm_raw``
     relation for exactly this).
 
-State layout under ``<product>/_state`` (versioned ``v=<k>`` snapshots;
-replay contract: ``streaming.logstate``):
+State layout under ``<product>/_state`` (versioned ``v=<k>`` snapshots,
+written and read back by ``write_product_state``; replay contract:
+``streaming.logstate``):
 
   * ``ds_channels/v=<k>`` — (dataset, channel, n_rows): surviving
     channels per dataset with x_long row counts. var = distinct
@@ -42,27 +49,33 @@ replay contract: ``streaming.logstate``):
   * ``ds_varm_raw/v=<k>`` — per-dataset varm rows BEFORE the var
     semi-join.
 
+State and stats come from the tables as written, never from the lazy
+build: an add batch derives the added datasets' state from the files it
+just appended (``written_tables``), and every commit's stats fold the
+persisted state and the written ``varm_long``. Each added dataset's
+HDF5 source is therefore decoded once per table write.
+
 Commit protocol (single-writer): EVERY pre-marker write lands at a path
 no committed reader resolves — added datasets' partition files are
 APPENDED under new names and become visible only through the commit's
-FILE-LEVEL MANIFEST (since round 9 each commit names its exact data
-files; ``read_product_table`` loads precisely those), state ``v=k+1``,
-and the axis tables at their own versioned ``var/v=k+1`` /
-``varm_long/v=k+1`` directories (committed readers stay pinned to the
-versions named in the live marker). uns, manifest and table stats
-travel INSIDE the commit file, so no live JSON is overwritten before
-the commit point either. The marker rename is therefore the ONLY
-reader-visible transition: a crash anywhere before it leaves the
-previous committed product byte-intact (property-tested with a failure
-seam at every write step), and the root-level
-``uns.json``/``<uuid>.json`` mirrors are refreshed post-commit. No
-committed file is ever overwritten — removed/re-added datasets write
-NEW files, so time travel is exact at every retained version — and
-nothing is deleted at commit: ``expire_snapshots`` applies
-retention-based file-grain GC afterwards (delete exactly the files no
-retained snapshot references), so a concurrent reader that resolved
-the previous marker can finish its scan without losing files mid-read,
-and historical versions stay readable until expired.
+FILE-LEVEL MANIFEST (each commit names its exact data files;
+``read_product_table`` loads precisely those), state ``v=k+1``, and the
+axis tables at their own versioned ``var/v=k+1`` / ``varm_long/v=k+1``
+directories (committed readers stay pinned to the versions named in the
+live marker). uns, manifest and table stats travel INSIDE the commit
+file, built by the one commit step ``write_commit_marker``, so no live
+JSON is overwritten before the commit point either. The marker rename
+is therefore the ONLY reader-visible transition: a crash anywhere
+before it leaves the previous committed product byte-intact
+(property-tested with a failure seam at every write step), and the
+root-level ``uns.json``/``<uuid>.json`` mirrors are refreshed
+post-commit. No committed file is ever overwritten — removed/re-added
+datasets write NEW files, so time travel is exact at every retained
+version — and nothing is deleted at commit: ``expire_snapshots``
+applies retention-based file-grain GC afterwards (delete exactly the
+files no retained snapshot references), so a concurrent reader that
+resolved the previous marker can finish its scan without losing files
+mid-read, and historical versions stay readable until expired.
 
 Invariants (tests/test_product_ivm.py): after any sequence of
 add/remove batches, every product table equals the from-scratch
@@ -85,49 +98,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codex_data_products_spark.plans.codex_pipeline import (
+    PARTITIONED_TABLES,
     CodexProduct,
-    PRODUCT_TABLES,
-    _files_size,
+    STATE_DIR,
+    STATE_TABLES,
+    VERSIONED_TABLES,
     _list_files,
     build_product,
-    snapshot_files,
+    catalog_leaves,
     derive_product_state,
     expire_snapshots,
     product_stats_from_state,
+    product_uns,
     read_catalog,
     read_commit_marker,
     write_commit_marker,
     write_product,
+    write_product_state,
+    written_tables,
 )
 from codex_data_products_spark.streaming.logstate import drain
 from codex_data_products_spark.streaming.merge import read_table
 
-_PARTITIONED = ("x_long", "obs", "edges")  # dataset-partitioned tables
+# Every written product carries its v=0 state; the name stays for
+# callers that bootstrap maintenance explicitly.
+bootstrap_product_maintenance = write_product
 
 
-def _state_root(out_dir: str) -> str:
-    return os.path.join(out_dir, "_state")
-
-
-def bootstrap_product_maintenance(
-    product: CodexProduct, out_dir: str
-) -> dict:
-    """Write the initial committed product plus the v=0 maintenance
-    state. An existing corpus is the base snapshot; every subsequent
-    release flows through ``apply_product_delta``. The state parquet is
-    written FIRST (invisible until the marker) and read back, so the
-    commit stats come from the same persisted relations the deltas will
-    fold — and the state aggregation runs once, not twice."""
-    spark = product.x_long.sparkSession
-    root = _state_root(out_dir)
-    persisted: dict[str, DataFrame] = {}
-    for name, df in derive_product_state(product).items():
-        df.write.mode("overwrite").parquet(f"{root}/{name}/v=0")
-        persisted[name] = spark.read.parquet(f"{root}/{name}/v=0")
-    stats = product_stats_from_state(
-        persisted["ds_channels"], persisted["ds_stats"], product.varm_long
-    )
-    return write_product(product, out_dir, stats=stats)
+def _read_state(spark: SparkSession, out_dir: str, version: int) -> dict:
+    """The maintenance state a batch anchored at ``version`` folds."""
+    return {
+        name: read_table(
+            spark, os.path.join(out_dir, STATE_DIR, name), version=version
+        )
+        for name in STATE_TABLES
+    }
 
 
 def _write_block_partitions(block: CodexProduct, out_dir: str) -> dict:
@@ -144,11 +149,10 @@ def _write_block_partitions(block: CodexProduct, out_dir: str) -> dict:
     until retention expires them. Also trivially safe under
     apply_fleet_delta's concurrent per-tissue threads — no session-conf
     juggling, and sibling tissues write disjoint partitions."""
-    frames = {"x_long": block.x_long, "obs": block.obs, "edges": block.edges}
     datasets = list(block.uns["dataset_uuids"])
     written: dict = {}
-    for table in _PARTITIONED:
-        df = frames[table]
+    for table in PARTITIONED_TABLES:
+        df = getattr(block, table)
         if df is None:
             written[table] = {ds: [] for ds in datasets}
             continue
@@ -175,48 +179,6 @@ def _write_block_partitions(block: CodexProduct, out_dir: str) -> dict:
             for ds in datasets
         }
     return written
-
-
-def _commit_snapshot(
-    out_dir: str,
-    uns: dict,
-    version: int,
-    surviving: list[str],
-    table_versions: dict,
-    stats: dict,
-    files: dict,
-    *,
-    _fail_after: str | None = None,
-) -> dict:
-    """Assemble manifest + commit descriptor (pure driver-side dict math
-    over the already-collected stats and the file-level manifest — the
-    size is a dict sum, no os.walk) and commit. Returns the manifest."""
-    manifest = {
-        "Data Product UUID": uns["uuid"],
-        "Tissue": uns.get("tissue"),
-        "Assay": "codex",
-        "Creation Time": uns["creation_data_time"],
-        "Dataset UUIDs": uns["dataset_uuids"],
-        "Dataset HBMIDs": uns["datasets"],
-        "Total Cell Count": stats["obs"]["rows"],
-        "Raw File Size": _files_size(files),
-    }
-    write_commit_marker(
-        out_dir,
-        {
-            "uuid": uns["uuid"],
-            "version": version,
-            "tables": list(PRODUCT_TABLES),
-            "dataset_uuids": surviving,
-            "table_versions": table_versions,
-            "uns": uns,
-            "manifest": manifest,
-            "stats": stats,
-            "files": files,
-        },
-        _fail_after=_fail_after,
-    )
-    return manifest
 
 
 def apply_product_delta(
@@ -264,9 +226,8 @@ def apply_product_delta(
         raise ValueError("a dataset cannot be both added and removed")
 
     base = read_commit_marker(out_dir, version=batch_id)
-    uns = dict(base["uns"])
-    root = _state_root(out_dir)
-    ds_channels = read_table(spark, f"{root}/ds_channels", version=batch_id)
+    uns = base["uns"]
+    state = _read_state(spark, out_dir, batch_id)
     # In-place REPLACE is rejected: the state fold and the file-manifest
     # carry-forward both assume an added dataset has no committed
     # contribution yet. Replace = remove in one batch, add in the next —
@@ -275,7 +236,7 @@ def apply_product_delta(
     # datasets this batch adds.)
     existing = {
         r["dataset"]
-        for r in ds_channels.select("dataset").distinct().collect()
+        for r in state["ds_channels"].select("dataset").distinct().collect()
     }
     re_added = sorted(set(added) & existing)
     if re_added:
@@ -283,16 +244,14 @@ def apply_product_delta(
             f"datasets already in the product: {re_added}; remove them "
             "in a prior batch before re-adding"
         )
-    ds_stats = read_table(spark, f"{root}/ds_stats", version=batch_id)
-    ds_varm_raw = read_table(spark, f"{root}/ds_varm_raw", version=batch_id)
 
     touched = added + removed
 
     # -- 1. block-build the added datasets (per-dataset-pure tables are
-    #       EXACTLY the full build's rows for them) and write only their
+    #       EXACTLY the full build's rows for them) and append only their
     #       partitions. Uncommitted until the marker flips.
-    block = None
-    block_files: dict = {t: {} for t in _PARTITIONED}
+    block_state: dict = {}
+    block_files: dict = {t: {} for t in PARTITIONED_TABLES}
     if added:
         block = build_product(
             spark,
@@ -306,27 +265,24 @@ def apply_product_delta(
             only_datasets=added,
         )
         block_files = _write_block_partitions(block, out_dir)
+        # the block's state comes from the files just appended, so the
+        # HDF5 sources decode once per table write, as in write_product
+        block_state = derive_product_state(
+            written_tables(block, out_dir, block_files)
+        )
     _checkpoint("partitions")
 
     # -- 2. fold the per-dataset state: drop touched datasets' rows,
-    #       union the block's freshly-derived rows (re-adding a dataset
-    #       replaces its contribution wholesale).
-    def fold(state: DataFrame, fresh: DataFrame | None) -> DataFrame:
-        kept = state.filter(~F.col("dataset").isin(touched))
+    #       union the block's freshly-derived rows.
+    def fold(name: str) -> DataFrame:
+        kept = state[name].filter(~F.col("dataset").isin(touched))
+        fresh = block_state.get(name)
         return kept.unionByName(fresh) if fresh is not None else kept
 
-    block_state = derive_product_state(block) if block is not None else {}
-    new_channels = fold(ds_channels, block_state.get("ds_channels"))
-    new_stats = fold(ds_stats, block_state.get("ds_stats"))
-    new_varm_raw = fold(ds_varm_raw, block_state.get("ds_varm_raw"))
-
     v = batch_id + 1
-    new_channels.write.mode("overwrite").parquet(f"{root}/ds_channels/v={v}")
-    new_stats.write.mode("overwrite").parquet(f"{root}/ds_stats/v={v}")
-    new_varm_raw.write.mode("overwrite").parquet(f"{root}/ds_varm_raw/v={v}")
-    new_channels = spark.read.parquet(f"{root}/ds_channels/v={v}")
-    new_stats = spark.read.parquet(f"{root}/ds_stats/v={v}")
-    new_varm_raw = spark.read.parquet(f"{root}/ds_varm_raw/v={v}")
+    new_state = write_product_state(
+        out_dir, v, {name: fold(name) for name in STATE_TABLES}
+    )
     _checkpoint("state")
 
     # -- 3. re-derive the channel-grain axis tables from state (tiny:
@@ -336,8 +292,10 @@ def apply_product_delta(
     #       per-dataset surviving sets; varm survivorship against the
     #       NEW global axis — the one place a block-local view would be
     #       wrong.
-    new_var = new_channels.select("channel").distinct()
-    new_varm = new_varm_raw.join(F.broadcast(new_var), "channel", "left_semi")
+    new_var = new_state["ds_channels"].select("channel").distinct()
+    new_varm = new_state["ds_varm_raw"].join(
+        F.broadcast(new_var), "channel", "left_semi"
+    )
     new_var.write.mode("overwrite").parquet(f"{out_dir}/var/v={v}")
     _checkpoint("var")
     new_varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
@@ -347,39 +305,36 @@ def apply_product_delta(
     # -- 4. uns + stats from the additive state (never a corpus scan):
     #       dataset lists in catalog leaf order — identical to what a
     #       from-scratch build over the surviving set emits.
-    stats_rows = {r["dataset"]: r for r in new_stats.collect()}
-    catalog_order = [
-        r["uuid"]
-        for r in read_catalog(spark, uuids_tsv)
-        .select("uuid", "immediate_descendant_ids")
-        .collect()
-        if r["immediate_descendant_ids"] is None
-    ]
-    surviving = [u for u in catalog_order if u in stats_rows]
-    surviving += sorted(u for u in stats_rows if u not in set(catalog_order))
-    uns["dataset_uuids"] = surviving
-    uns["datasets"] = [stats_rows[u]["hubmap_id"] for u in surviving]
-    stats = product_stats_from_state(new_channels, new_stats, new_varm)
+    stats_rows = {r["dataset"]: r for r in new_state["ds_stats"].collect()}
+    _, leaves = catalog_leaves(read_catalog(spark, uuids_tsv))
+    order = [r["uuid"] for r in leaves if r["uuid"] in stats_rows]
+    order += sorted(set(stats_rows) - set(order))
+    new_uns = product_uns(
+        [(u, stats_rows[u]["hubmap_id"]) for u in order],
+        uns.get("tissue"),
+        uns["uuid"],
+        uns["creation_data_time"],
+    )
+    stats = product_stats_from_state(
+        new_state["ds_channels"], new_state["ds_stats"], new_varm
+    )
 
     # file-level manifest for the new snapshot: carried-forward entries
     # for untouched datasets (their files are immutable), the block's
     # freshly-appended files for added datasets, removed datasets
     # dropped, and the new axis versions listed. Pure dict math plus
     # one listing of the delta's own writes.
-    base_files = snapshot_files(out_dir, base)
     files: dict = {}
-    for t in _PARTITIONED:
+    for t in PARTITIONED_TABLES:
         files[t] = {
-            ds: base_files.get(t, {}).get(ds, [])
-            for ds in surviving
+            ds: base["files"][t].get(ds, [])
+            for ds in order
             if ds not in set(added)
         }
         for ds in added:
             files[t][ds] = block_files[t].get(ds, [])
-    files["var"] = _list_files(os.path.join(out_dir, "var", f"v={v}"), out_dir)
-    files["varm_long"] = _list_files(
-        os.path.join(out_dir, "varm_long", f"v={v}"), out_dir
-    )
+    for t in VERSIONED_TABLES:
+        files[t] = _list_files(os.path.join(out_dir, t, f"v={v}"), out_dir)
     _checkpoint("manifest")
 
     # -- 5. COMMIT POINT (atomic rename), then retention-based GC: the
@@ -387,11 +342,10 @@ def apply_product_delta(
     #       versions outlive this commit until no retained snapshot
     #       references them (expire_snapshots), so concurrent readers of
     #       the previous snapshot never lose files mid-scan.
-    manifest = _commit_snapshot(
+    manifest = write_commit_marker(
         out_dir,
-        uns,
+        new_uns,
         v,
-        surviving,
         {"var": v, "varm_long": v},
         stats,
         files,
@@ -427,11 +381,8 @@ def apply_metadata_refresh(
 
     targets = list(dict.fromkeys(datasets))
     base = read_commit_marker(out_dir, version=batch_id)
-    uns = dict(base["uns"])
-    root = _state_root(out_dir)
-    ds_channels = read_table(spark, f"{root}/ds_channels", version=batch_id)
-    ds_stats = read_table(spark, f"{root}/ds_stats", version=batch_id)
-    ds_varm_raw = read_table(spark, f"{root}/ds_varm_raw", version=batch_id)
+    uns = base["uns"]
+    state = _read_state(spark, out_dir, batch_id)
     known = set(base["dataset_uuids"])
     missing = [d for d in targets if d not in known]
     if missing:
@@ -447,39 +398,33 @@ def apply_metadata_refresh(
         creation_time=uns["creation_data_time"],
         only_datasets=targets,
     )
-    new_varm_raw = ds_varm_raw.filter(
-        ~F.col("dataset").isin(targets)
-    ).unionByName(block.varm_raw)
+    state["ds_varm_raw"] = (
+        state["ds_varm_raw"]
+        .filter(~F.col("dataset").isin(targets))
+        .unionByName(block.varm_raw)
+    )
 
     v = batch_id + 1
-    ds_channels.write.mode("overwrite").parquet(f"{root}/ds_channels/v={v}")
-    ds_stats.write.mode("overwrite").parquet(f"{root}/ds_stats/v={v}")
-    new_varm_raw.write.mode("overwrite").parquet(f"{root}/ds_varm_raw/v={v}")
-    new_varm_raw = spark.read.parquet(f"{root}/ds_varm_raw/v={v}")
-    new_channels = spark.read.parquet(f"{root}/ds_channels/v={v}")
-    new_stats = spark.read.parquet(f"{root}/ds_stats/v={v}")
-
+    new_state = write_product_state(out_dir, v, state)
     var_version = base["table_versions"]["var"]
     var = spark.read.parquet(f"{out_dir}/var/v={var_version}")
-    new_varm = new_varm_raw.join(F.broadcast(var), "channel", "left_semi")
+    new_varm = new_state["ds_varm_raw"].join(
+        F.broadcast(var), "channel", "left_semi"
+    )
     new_varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
     new_varm = spark.read.parquet(f"{out_dir}/varm_long/v={v}")
 
-    stats = product_stats_from_state(new_channels, new_stats, new_varm)
+    stats = product_stats_from_state(
+        new_state["ds_channels"], new_state["ds_stats"], new_varm
+    )
     # metadata-only delta: every partitioned file carries forward; only
     # the varm_long axis version is new
-    files = dict(snapshot_files(out_dir, base))
+    files = dict(base["files"])
     files["varm_long"] = _list_files(
         os.path.join(out_dir, "varm_long", f"v={v}"), out_dir
     )
-    manifest = _commit_snapshot(
-        out_dir,
-        uns,
-        v,
-        list(base["dataset_uuids"]),
-        {"var": var_version, "varm_long": v},
-        stats,
-        files,
+    manifest = write_commit_marker(
+        out_dir, uns, v, {"var": var_version, "varm_long": v}, stats, files
     )
     if retain_snapshots is not None:
         expire_snapshots(out_dir, keep_last=retain_snapshots)
@@ -543,8 +488,9 @@ def run_product_maintenance(
 # ---------------------------------------------------------------------------
 # Fleet maintenance: one release batch over EVERY tissue's product.
 #
-# build_products (plans/codex_pipeline.py) answers "build the whole
-# fleet in one invocation"; this answers the operational sequel —
+# build_products + write_products (plans/codex_pipeline.py) build and
+# commit the whole fleet, v=0 state included, in one invocation; this
+# answers the operational sequel —
 # "apply this release's adds/removes to the whole fleet in one
 # invocation". Routing is automatic: added datasets resolve to a tissue
 # through the catalog (or tissue_by_uuid), removed datasets resolve to
@@ -561,16 +507,6 @@ def run_product_maintenance(
 # every product, so a crashed/replayed fleet batch re-derives identical
 # snapshots without per-tissue version bookkeeping.
 # ---------------------------------------------------------------------------
-
-
-def bootstrap_fleet_maintenance(products, root: str) -> dict:
-    """Bootstrap every tissue's committed product + v=0 state under
-    ``root/<tissue>`` (the maintenance twin of write_products).
-    ``products`` is the dict build_products returns."""
-    return {
-        t: bootstrap_product_maintenance(p, os.path.join(root, t))
-        for t, p in sorted(products.items())
-    }
 
 
 def apply_fleet_delta(
@@ -633,8 +569,8 @@ def apply_fleet_delta(
         if t not in tissues:
             raise ValueError(
                 f"dataset {u} resolves to tissue {t!r} with no maintained "
-                f"product under {root}: bootstrap it first "
-                "(bootstrap_product_maintenance)"
+                f"product under {root}: write it first "
+                "(write_product or write_products)"
             )
         add_by_tissue.setdefault(t, []).append(u)
 

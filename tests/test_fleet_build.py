@@ -208,7 +208,6 @@ def test_unresolved_tissue_raises(spark, bundle):
 
 from codex_data_products_spark.streaming.product_ivm import (  # noqa: E402
     apply_fleet_delta,
-    bootstrap_product_maintenance,
 )
 
 
@@ -233,7 +232,7 @@ def maintained_fleet(spark, bundle, tmp_path):
     interleaved rest."""
     root = str(tmp_path / "fleet_ivm")
     for t, ds in (("Spleen", [DS[0]]), ("Thymus", [DS[1]])):
-        bootstrap_product_maintenance(
+        write_product(
             _build_one(spark, bundle, t, ds), os.path.join(root, t)
         )
     return root

@@ -36,7 +36,6 @@ from codex_data_products_spark.plans.codex_pipeline import (
 )
 from codex_data_products_spark.streaming.product_ivm import (
     apply_product_delta,
-    bootstrap_product_maintenance,
     run_product_maintenance,
 )
 
@@ -59,7 +58,7 @@ def bundle(tmp_path_factory):
     return out
 
 
-def _build(spark, bundle, datasets):
+def _build(spark, bundle, datasets, **kw):
     return build_product(
         spark,
         os.path.join(bundle, "data"),
@@ -68,7 +67,29 @@ def _build(spark, bundle, datasets):
         product_uuid="ivm-product",
         creation_time="2026-08-15 00:00:00",
         only_datasets=datasets,
+        **kw,
     )
+
+
+def _logging_decoder(log):
+    """The default decoder, appending each decoded path to ``log``."""
+    from codex_data_products_spark.sources.hdf5 import h5py_decoder
+
+    def decode(payload, path):
+        # O_APPEND single-write is atomic for short lines — safe across
+        # the local-mode Python workers
+        fd = os.open(log, os.O_WRONLY | os.O_CREAT | os.O_APPEND)
+        try:
+            os.write(fd, (path + "\n").encode())
+        finally:
+            os.close(fd)
+        return h5py_decoder(payload, path)
+
+    return decode
+
+
+def _decoded(log):
+    return sorted(open(log).read().splitlines()) if os.path.exists(log) else []
 
 
 def _table_rows(spark, out_dir, table, version=None):
@@ -121,7 +142,7 @@ def maintained(spark, bundle, tmp_path_factory):
     {2,3,4,5}; yields (product_dir, shared tmp dir)."""
     tmp = tmp_path_factory.mktemp("ivm_runs")
     out = str(tmp / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
 
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
@@ -232,7 +253,7 @@ def test_crash_at_every_write_step_keeps_previous_snapshot(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     base = _snapshot_product(spark, out)
 
     with pytest.raises(RuntimeError, match=f"injected crash after {step}"):
@@ -261,7 +282,7 @@ def test_crash_at_marker_rename_keeps_previous_snapshot(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
+    write_product(_build(spark, bundle, DS[:1]), out)
     base = _snapshot_product(spark, out)
 
     def boom(*a, **k):
@@ -295,7 +316,7 @@ def test_removal_retracts_private_channels_from_var(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     var0 = {r["channel"] for r in read_product_table(spark, out, "var").collect()}
     assert any(c.startswith("PRIV1_") for c in var0)
 
@@ -329,7 +350,7 @@ def test_concurrent_reader_survives_delta_commit(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     # reader opens snapshot v=0 (plans pinned to v=0 axis paths + the
     # v=0 dataset list) but does NOT execute yet
     reader_x = read_product_table(spark, out, "x_long")
@@ -350,7 +371,7 @@ def test_mirror_files_match_committed_snapshot(spark, bundle, tmp_path):
     of the marker's canonical content (reference-parity files,
     bin/concatenate.py:454-468)."""
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     apply_product_delta(
         spark, out, os.path.join(bundle, "data"),
         os.path.join(bundle, "uuids.tsv"), 0, add=[DS[2]],
@@ -375,7 +396,7 @@ def test_commit_stats_feed_plan_join_without_a_stats_job(
     )
 
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     stats = product_table_stats(out)
     # exact values, persisted additively at commit
     x = read_product_table(spark, out, "x_long")
@@ -405,7 +426,7 @@ def test_streaming_drain_applies_change_feed(spark, bundle, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
+    write_product(_build(spark, bundle, DS[:1]), out)
 
     spark.createDataFrame(
         [("add", DS[1])], "op string, dataset string"
@@ -422,20 +443,90 @@ def test_streaming_drain_applies_change_feed(spark, bundle, tmp_path):
 
 
 def test_write_product_crash_atomicity(spark, bundle, tmp_path):
-    """VERDICT r6 #5: a crash between table writes leaves no readable
-    half-product (no marker -> committed reads refuse), and a re-run
-    converges to a committed product."""
-    out = str(tmp_path / "product")
+    """VERDICT r6 #5: a crash between table writes, or after the v=0
+    state, leaves no readable half-product (no marker -> committed
+    reads refuse), and a re-run converges to a committed product."""
     product = _build(spark, bundle, DS[:1])
-    with pytest.raises(RuntimeError, match="injected crash after obs"):
-        write_product(product, out, _fail_after="obs")
-    assert not os.path.exists(f"{out}/{COMMIT_MARKER}")
-    with pytest.raises(FileNotFoundError, match="uncommitted"):
-        read_product_table(spark, out, "x_long")
-    # re-run converges: overwrite semantics, marker lands last
-    write_product(product, out)
-    assert read_commit_marker(out)["dataset_uuids"] == [DS[0]]
-    assert read_product_table(spark, out, "x_long").count() > 0
+    for step in ("obs", "state"):
+        out = str(tmp_path / f"product_{step}")
+        with pytest.raises(RuntimeError, match=f"injected crash after {step}"):
+            write_product(product, out, _fail_after=step)
+        assert not os.path.exists(f"{out}/{COMMIT_MARKER}")
+        with pytest.raises(FileNotFoundError, match="uncommitted"):
+            read_product_table(spark, out, "x_long")
+        # re-run converges: overwrite semantics, marker lands last
+        write_product(product, out)
+        assert read_commit_marker(out)["dataset_uuids"] == [DS[0]]
+        assert read_product_table(spark, out, "x_long").count() > 0
+
+
+def test_state_and_stats_decode_no_hdf5(spark, bundle, tmp_path):
+    """State and commit stats come from the tables as written: a full
+    write_product decodes each HDF5 source exactly as often as its table
+    writes alone (a crash right after them), and a full add batch
+    exactly as often as one that crashes right after appending its
+    partitions."""
+    data = os.path.join(bundle, "data")
+    cat = os.path.join(bundle, "uuids.tsv")
+    out = str(tmp_path / "product")
+
+    def decodes(tag, step, run):
+        log = str(tmp_path / f"{tag}.log")
+        if step is None:
+            run(_logging_decoder(log))
+        else:
+            with pytest.raises(RuntimeError, match=f"after {step}"):
+                run(_logging_decoder(log), _fail_after=step)
+        return _decoded(log)
+
+    def write(dest):
+        return lambda decoder, **kw: write_product(
+            _build(spark, bundle, DS[:2], decoder=decoder), dest, **kw
+        )
+
+    def add(decoder, **kw):
+        apply_product_delta(
+            spark, out, data, cat, 0, add=[DS[2]], decoder=decoder, **kw
+        )
+
+    tables = decodes("tables", "tables", write(str(tmp_path / "crashed")))
+    assert tables and decodes("write", None, write(out)) == tables
+    partitions = decodes("partitions", "partitions", add)
+    assert partitions and decodes("add", None, add) == partitions
+    assert all(DS[2] in p for p in partitions)
+
+
+def test_delta_on_written_product_equals_from_scratch(spark, bundle, tmp_path):
+    """Every written product is maintainable: batch 0 on a product
+    committed by plain write_product equals the from-scratch build."""
+    out = str(tmp_path / "product")
+    write_product(_build(spark, bundle, DS[:1]), out)
+    apply_product_delta(
+        spark, out, os.path.join(bundle, "data"),
+        os.path.join(bundle, "uuids.tsv"), 0, add=[DS[1]],
+    )
+    _assert_equals_from_scratch(
+        spark, bundle, out, DS[:2], tmp_path, "written"
+    )
+
+
+def test_marker_without_file_manifest_fails_fast(tmp_path):
+    """A commit without its file-level manifest is refused at the
+    marker, with the remedy, by every reader and by retention GC."""
+    out = str(tmp_path / "product")
+    os.makedirs(os.path.join(out, "_commits"))
+    marker = {"uuid": "u", "version": 0, "dataset_uuids": [DS[0]],
+              "table_versions": {"var": 0, "varm_long": 0}}
+    for path in (COMMIT_MARKER, "_commits/v=0.json"):
+        with open(os.path.join(out, path), "w") as f:
+            json.dump(marker, f)
+    for call in (
+        lambda: read_commit_marker(out),
+        lambda: read_product_table(None, out, "x_long"),
+        lambda: expire_snapshots(out),
+    ):
+        with pytest.raises(ValueError, match="rebuild it with write_product"):
+            call()
 
 
 def test_in_place_replace_is_rejected(spark, bundle, tmp_path):
@@ -446,7 +537,7 @@ def test_in_place_replace_is_rejected(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     with pytest.raises(ValueError, match="already in the product"):
         apply_product_delta(spark, out, data, cat, 0, add=[DS[1]])
     # remove then add in separate batches works
@@ -467,7 +558,7 @@ def test_committed_read_scans_exactly_the_manifest_files(
     from pyspark.sql import functions as F
 
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     # plant an orphan data file inside a committed partition dir (what
     # a crashed append attempt leaves behind) — a dir-scan would read it
     part = f"{out}/x_long/dataset={DS[0]}"
@@ -514,7 +605,7 @@ def test_manifest_size_excludes_state_and_unreferenced_files(
     cat = os.path.join(bundle, "uuids.tsv")
     from codex_data_products_spark.plans.codex_pipeline import _files_size
 
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     apply_product_delta(spark, out, data, cat, 0, add=[DS[2]], remove=[DS[1]])
     size_after_batch = read_manifest(out)["Raw File Size"]
 
@@ -557,7 +648,7 @@ def test_metadata_refresh_never_decodes_hdf5(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(b2, "data")
     cat = os.path.join(b2, "uuids.tsv")
-    bootstrap_product_maintenance(
+    write_product(
         build_product(
             spark, data, cat, tissue="Spleen",
             product_uuid="ivm-product", creation_time="2026-08-15 00:00:00",
@@ -619,7 +710,7 @@ def test_time_travel_exact_across_remove_then_readd(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     apply_product_delta(
         spark, out, data, cat, 0, remove=[DS[1]], retain_snapshots=None
     )
@@ -655,7 +746,7 @@ def test_expire_keeps_files_shared_by_retained_snapshots(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    write_product(_build(spark, bundle, DS[:2]), out)
     apply_product_delta(
         spark, out, data, cat, 0, remove=[DS[1]], retain_snapshots=None
     )

@@ -256,7 +256,7 @@ def run(out: str, n_datasets: int, n_cells: int) -> dict:
 
 
 def run_delta(out: str, n_datasets: int, n_cells: int, n_add: int, n_remove: int) -> dict:
-    """The incremental-maintenance stress (VERDICT r6 #1): bootstrap the
+    """The incremental-maintenance stress (VERDICT r6 #1): write the
     maintained product on the first ``n_datasets - n_add`` datasets,
     apply ONE delta batch (add the last ``n_add``, remove the first
     ``n_remove``), and compare the maintained product's invariant counts
@@ -271,7 +271,6 @@ def run_delta(out: str, n_datasets: int, n_cells: int, n_add: int, n_remove: int
     from codex_data_products_spark.session import get_spark
     from codex_data_products_spark.streaming.product_ivm import (
         apply_product_delta,
-        bootstrap_product_maintenance,
     )
 
     spark = get_spark(app_name="codex-stress-delta")
@@ -288,7 +287,7 @@ def run_delta(out: str, n_datasets: int, n_cells: int, n_add: int, n_remove: int
         product_uuid="stress-delta", creation_time="2026-08-15 00:00:00",
         only_datasets=base,
     )
-    bootstrap_product_maintenance(product, os.path.join(out, "maintained"))
+    write_product(product, os.path.join(out, "maintained"))
     bootstrap_sec = round(time.perf_counter() - t0, 1)
 
     t1 = time.perf_counter()
@@ -342,8 +341,8 @@ def run_fleet(
     n_add: int, n_remove: int,
 ) -> dict:
     """Fleet-maintenance stress (round-8 second wave): datasets split
-    round-robin across ``n_tissues`` tissue products, bootstrapped via
-    bootstrap_fleet_maintenance, then TWO fleet batches are timed:
+    round-robin across ``n_tissues`` tissue products, written via
+    write_products, then TWO fleet batches are timed:
 
       * batch 0 — a real release touching ONLY tissue T0 (add n_add,
         remove n_remove); the other tissues ride the lockstep no-op
@@ -359,11 +358,11 @@ def run_fleet(
         build_product,
         read_product_table,
         write_product,
+        write_products,
     )
     from codex_data_products_spark.session import get_spark
     from codex_data_products_spark.streaming.product_ivm import (
         apply_fleet_delta,
-        bootstrap_fleet_maintenance,
     )
 
     spark = get_spark(app_name="codex-stress-fleet")
@@ -389,7 +388,7 @@ def run_fleet(
             tissue_by_uuid=tissue_of,
         )
     root = os.path.join(out, "fleet")
-    bootstrap_fleet_maintenance(products, root)
+    write_products(products, root)
     bootstrap_sec = round(time.perf_counter() - t0, 1)
 
     t1 = time.perf_counter()

@@ -26,6 +26,7 @@ import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field, replace
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,7 @@ from codex_data_products_spark.sources.expression_csv import (
 from codex_data_products_spark.sources.hdf5 import Decoder, h5py_decoder, read_hdf5_expression
 from codex_data_products_spark.sources.labels import read_labels, remap_edges_to_cell_ids
 from codex_data_products_spark.sources.matrix_market import read_matrix_market
+from codex_data_products_spark.tables import local_frame, run_lanes
 
 # S10: the five glob families, two filename variants each
 # (find_files_by_type, bin/concatenate.py:118-151).
@@ -171,8 +173,8 @@ def _dataset_parts(
     # (J4 on var names: find_antibody_key only, bin/concatenate.py:246).
     raw_channels = read_channel_names(files["expression_csv"])
     channels = [canonical_channel_py(c) for c in raw_channels]
-    channel_map = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(channels)], "channel_idx int, channel string"
+    channel_map = local_frame(
+        spark, list(enumerate(channels)), "channel_idx int, channel string"
     )
 
     # S4: HDF5 decode (one task per file) → long rows; channel names
@@ -214,9 +216,7 @@ def _dataset_parts(
         antb = first_match_per_antibody(
             read_antibodies(spark, antibodies_path)
         )
-        ds_channels = spark.createDataFrame(
-            [(c,) for c in channels], "channel string"
-        )
+        ds_channels = local_frame(spark, [(c,) for c in channels], "channel string")
         varm = antb.join(
             ds_channels, antb.antibody_name == ds_channels.channel, "inner"
         ).select(
@@ -270,7 +270,8 @@ def _assemble_product(
     varm_long = (
         union_all(varm_parts)
         if varm_parts
-        else spark.createDataFrame(
+        else local_frame(
+            spark,
             [],
             "channel string, dataset string, uniprot string, rrid string, "
             "antibodies_tsv_id string",
@@ -840,7 +841,8 @@ def derive_product_state(product: CodexProduct) -> dict[str, DataFrame]:
     ds_channels = product.x_long.groupBy("dataset", "channel").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows")
     )
-    hbm = spark.createDataFrame(
+    hbm = local_frame(
+        spark,
         list(zip(product.uns["dataset_uuids"], product.uns["datasets"])),
         "dataset string, hubmap_id string",
     )
@@ -852,7 +854,7 @@ def derive_product_state(product: CodexProduct) -> dict[str, DataFrame]:
             F.count(F.lit(1)).cast("long").alias("n_edges")
         )
     else:
-        edge_counts = spark.createDataFrame([], "dataset string, n_edges long")
+        edge_counts = local_frame(spark, [], "dataset string, n_edges long")
     ds_stats = (
         cells.join(F.broadcast(hbm), "dataset")
         .join(F.broadcast(edge_counts), "dataset", "left")
@@ -902,80 +904,98 @@ def write_product_state(
 ) -> dict[str, DataFrame]:
     """Persist the three maintenance-state relations at
     ``_state/<name>/v=<version>`` (overwrite — a replayed batch rewrites
-    its own version) and return them read back, so everything computed
-    afterwards (axis tables, commit stats) folds the persisted rows."""
+    its own version) as three concurrent lanes (``tables.run_lanes``),
+    and return them read back, so everything computed afterwards (axis
+    tables, commit stats) folds the persisted rows. A failing lane is
+    re-raised only after its siblings finished writing."""
     spark = state["ds_channels"].sparkSession
-    out = {}
-    for name in STATE_TABLES:
+
+    def write(name: str) -> DataFrame:
         path = os.path.join(out_dir, STATE_DIR, name, f"v={version}")
         state[name].write.mode("overwrite").parquet(path)
-        out[name] = spark.read.parquet(path)
-    return out
+        return spark.read.parquet(path)
+
+    lanes = (partial(write, name) for name in STATE_TABLES)
+    return dict(zip(STATE_TABLES, run_lanes(spark, *lanes)))
 
 
-def _col_stats(df: DataFrame, col: str, weight: str | None = None) -> dict:
-    """ndv + hottest-key row count for one join-key column of a
-    STATE-GRAIN frame (channel×dataset rows — never a corpus scan)."""
-    w = F.sum(weight) if weight else F.count(F.lit(1))
-    r = (
-        df.groupBy(col)
-        .agg(w.cast("long").alias("n"))
-        .agg(F.count(F.lit(1)).alias("ndv"), F.max("n").alias("max_rows"))
-        .collect()[0]
+def write_axis_table(df: DataFrame, path: str) -> None:
+    """Overwrite one version of a channel-grain axis table (``var``,
+    ``varm_long``) as a single file from one writer task, rows sorted by
+    (channel, dataset, the rest): the table is channels x datasets rows
+    at any corpus size, and the same rows always commit the same bytes,
+    however the upstream plan happens to split them."""
+    first = [c for c in ("channel", "dataset") if c in df.columns]
+    order = first + [c for c in df.columns if c not in first]
+    df.coalesce(1).sortWithinPartitions(*order).write.mode("overwrite").parquet(
+        path
     )
-    return {"ndv": int(r["ndv"] or 0), "max_rows": int(r["max_rows"] or 0)}
+
+
+def _key_stats(rows: list, key: str, weight: str | None = None) -> dict:
+    """ndv + hottest-key row count for one join-key column, folded on
+    the driver over STATE-GRAIN rows (channel x dataset — never a corpus
+    scan)."""
+    n: dict = {}
+    for r in rows:
+        n[r[key]] = n.get(r[key], 0) + (r[weight] if weight else 1)
+    return {"ndv": len(n), "max_rows": max(n.values(), default=0)}
 
 
 def product_stats_from_state(
     ds_channels: DataFrame, ds_stats: DataFrame, varm_long: DataFrame
 ) -> dict:
     """Commit-time table statistics, computed ADDITIVELY from the
-    maintenance state (every aggregation here is channel×dataset-grain):
-    rows per table plus ndv/hottest-key counts for the join-key columns
-    — what ``estimate_from_stats`` + ``plan_join`` consume to pick a
-    physical join strategy on a freshly-opened product with no stats
-    job. At 100 TB this is the difference between 'open and plan' and
-    'scan the corpus to plan'."""
-    s = ds_stats.agg(
-        F.coalesce(F.sum("n_cells"), F.lit(0)).alias("cells"),
-        F.coalesce(F.max("n_cells"), F.lit(0)).alias("max_cells"),
-        F.count(F.lit(1)).alias("n_datasets"),
-        F.coalesce(F.sum("n_edges"), F.lit(0)).alias("edges"),
-        F.coalesce(F.max("n_edges"), F.lit(0)).alias("max_edges"),
-    ).collect()[0]
-    x_rows = int(
-        ds_channels.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).collect()[0][0]
+    maintenance state: rows per table plus ndv/hottest-key counts for
+    the join-key columns — what ``estimate_from_stats`` + ``plan_join``
+    consume to pick a physical join strategy on a freshly-opened product
+    with no stats job. At 100 TB this is the difference between 'open
+    and plan' and 'scan the corpus to plan'.
+
+    The three frames are channel x dataset grain, so each is read once
+    (the three reads run as concurrent lanes) and every sum, ndv and max
+    is folded on the driver."""
+    spark = ds_channels.sparkSession
+    ch_rows, ds_rows, varm_rows = run_lanes(
+        spark,
+        ds_channels.select("dataset", "channel", "n_rows").collect,
+        ds_stats.select("n_cells", "n_edges").collect,
+        varm_long.select("channel", "dataset").collect,
     )
-    x_ds = _col_stats(ds_channels, "dataset", "n_rows")
-    x_ch = _col_stats(ds_channels, "channel", "n_rows")
-    varm_rows = varm_long.count()
-    n_ds = int(s["n_datasets"])
+    x_ch = _key_stats(ch_rows, "channel", "n_rows")
+    n_ds = len(ds_rows)
+
+    def total(col: str) -> int:
+        return sum(r[col] or 0 for r in ds_rows)
+
+    def top(col: str) -> int:
+        return max((r[col] or 0 for r in ds_rows), default=0)
+
     return {
         "x_long": {
-            "rows": x_rows,
-            "columns": {"dataset": x_ds, "channel": x_ch},
+            "rows": sum(r["n_rows"] for r in ch_rows),
+            "columns": {
+                "dataset": _key_stats(ch_rows, "dataset", "n_rows"),
+                "channel": x_ch,
+            },
         },
         "obs": {
-            "rows": int(s["cells"]),
-            "columns": {
-                "dataset": {"ndv": n_ds, "max_rows": int(s["max_cells"])}
-            },
+            "rows": total("n_cells"),
+            "columns": {"dataset": {"ndv": n_ds, "max_rows": top("n_cells")}},
         },
         "edges": {
-            "rows": int(s["edges"]),
-            "columns": {
-                "dataset": {"ndv": n_ds, "max_rows": int(s["max_edges"])}
-            },
+            "rows": total("n_edges"),
+            "columns": {"dataset": {"ndv": n_ds, "max_rows": top("n_edges")}},
         },
         "var": {
             "rows": x_ch["ndv"],
             "columns": {"channel": {"ndv": x_ch["ndv"], "max_rows": 1}},
         },
         "varm_long": {
-            "rows": int(varm_rows),
+            "rows": len(varm_rows),
             "columns": {
-                "channel": _col_stats(varm_long, "channel"),
-                "dataset": _col_stats(varm_long, "dataset"),
+                "channel": _key_stats(varm_rows, "channel"),
+                "dataset": _key_stats(varm_rows, "dataset"),
             },
         },
     }
@@ -994,17 +1014,23 @@ def write_product(
 
     Layout: x_long/obs/edges partitioned by dataset (partition pruning
     for per-dataset consumers, O(delta) maintenance); var/varm_long are
-    channel-grain tables at ``v=0``, so later snapshots commit ``v=k``
-    beside them without overwriting a committed reader's files.
+    channel-grain tables at ``v=0`` (``write_axis_table``: one sorted
+    file each), so later snapshots commit ``v=k`` beside them without
+    overwriting a committed reader's files.
+
+    The five tables are written as concurrent lanes
+    (``tables.run_lanes``): they share no output, so the write costs
+    its slowest table, not the sum of five job barriers. Lane jobs keep
+    the caller's job group and description.
 
     State and stats come from the tables as written: the dataset-
     partitioned tables are read back from exactly the files just listed
     (``written_tables``), their per-dataset state is persisted at
-    ``_state/<name>/v=0`` (``write_product_state``), and the commit
-    stats fold that state and the written ``varm_long/v=0``. Each HDF5
-    source is decoded once per table write and never for the stats, and
-    every written product can be evolved by
-    ``streaming.product_ivm.apply_product_delta`` as it is.
+    ``_state/<name>/v=0`` (``write_product_state``, three more lanes),
+    and the commit stats fold that state and the written
+    ``varm_long/v=0``. Each HDF5 source is decoded once per table write
+    and never for the stats, and every written product can be evolved
+    by ``streaming.product_ivm.apply_product_delta`` as it is.
 
     Marker-last: a crash at any point leaves no marker, so committed
     reads refuse the half-product, and a re-run converges (every write
@@ -1013,8 +1039,11 @@ def write_product(
     overwritten in place).
 
     ``_fail_after`` ∈ {x_long, obs, tables, state, manifest,
-    commit_file} is the failure-injection seam for the atomicity
-    test."""
+    commit_file} is the failure-injection seam for the atomicity test.
+    ``x_long`` and ``obs`` raise inside their own lane, after its write;
+    the other lanes still run to their end before the crash surfaces,
+    so it leaves every table written and no marker. ``tables`` raises
+    after all lanes."""
 
     def _checkpoint(step: str) -> None:
         if _fail_after == step:
@@ -1022,22 +1051,25 @@ def write_product(
 
     spark = product.x_long.sparkSession
     os.makedirs(out_dir, exist_ok=True)
-    product.x_long.write.mode("overwrite").partitionBy("dataset").parquet(
-        f"{out_dir}/x_long"
+
+    def write(table: str) -> None:
+        df = getattr(product, table)
+        if table in PARTITIONED_TABLES:
+            df.write.mode("overwrite").partitionBy("dataset").parquet(
+                f"{out_dir}/{table}"
+            )
+        else:
+            write_axis_table(df, f"{out_dir}/{table}/v=0")
+        _checkpoint(table)
+
+    run_lanes(
+        spark,
+        *(
+            partial(write, t)
+            for t in PRODUCT_TABLES
+            if getattr(product, t) is not None
+        ),
     )
-    _checkpoint("x_long")
-    product.obs.write.mode("overwrite").partitionBy("dataset").parquet(
-        f"{out_dir}/obs"
-    )
-    _checkpoint("obs")
-    product.var.write.mode("overwrite").parquet(f"{out_dir}/var/v=0")
-    product.varm_long.write.mode("overwrite").parquet(
-        f"{out_dir}/varm_long/v=0"
-    )
-    if product.edges is not None:
-        product.edges.write.mode("overwrite").partitionBy("dataset").parquet(
-            f"{out_dir}/edges"
-        )
     _checkpoint("tables")
 
     # file-level manifest (the Iceberg move, VERDICT r8 #3): the commit
@@ -1076,7 +1108,9 @@ def write_product(
 def wide_matrix(product: CodexProduct, layer: str = "total") -> DataFrame:
     """P3 export path: the long expression relation pivoted wide — one
     double column per surviving channel, one row per cell (the
-    AnnData.X orientation, bin/concatenate.py:266).
+    AnnData.X orientation, bin/concatenate.py:266). The Spark-side
+    pivot for consumers that stay in Spark; ``export_h5mu`` builds the
+    same matrix on the driver.
 
     The channel list is plan-time metadata (≤ hundreds), so the pivot
     gets an explicit value list — no extra distinct-scan job, stable
@@ -1097,11 +1131,18 @@ def export_h5mu(product: CodexProduct, path: str) -> None:
     (reference behavior: bin/concatenate.py:454-456).
 
     Driver-side by design (SURVEY §4: real products are single-machine
-    sized — the reference itself materializes them in RAM). With
-    ``anndata``/``mudata`` installed, writes a full-fidelity h5mu;
-    without them, falls back to the from-scratch HDF5 codec
-    (``sources/minihdf5``), emitting real spec-layout bytes in the
-    mudata group convention — ``/mod/<uuid>_raw/X`` plus ``obs``/
+    sized — the reference itself materializes them in RAM). Two reads,
+    run as concurrent lanes: ``x_long``'s (cell_id, channel, total)
+    rows and ``obs``. X is scattered on the driver with numpy: one row
+    per ``obs`` cell in ``obs`` order, one column per channel of the
+    sorted channel set of those rows (which is ``product.var`` by
+    construction), NaN wherever a (cell, channel) pair is absent — so a
+    cell whose dataset kept no channel is an all-NaN row (U1
+    outer-concat semantics; ``wide_matrix`` is the same matrix as a
+    Spark pivot). With ``anndata``/``mudata`` installed, writes a
+    full-fidelity h5mu; without them, falls back to the from-scratch
+    HDF5 codec (``sources/minihdf5``), emitting real spec-layout bytes
+    in the mudata group convention — ``/mod/<uuid>_raw/X`` plus ``obs``/
     ``var`` groups with an ``_index`` dataset and one dataset per
     column (numeric as f64/i64, everything else as fixed-length
     strings). ``uns`` metadata stays in the parquet layout's
@@ -1109,13 +1150,24 @@ def export_h5mu(product: CodexProduct, path: str) -> None:
     the primary, scale-safe format either way.
     """
     import numpy as np
+    import pandas as pd
 
-    wide = wide_matrix(product).toPandas()
-    obs = product.obs.toPandas().set_index("cell_id")
-    var = product.var.toPandas().set_index("channel")
-    wide = wide.set_index("cell_id").loc[obs.index]
+    long, obs = run_lanes(
+        product.x_long.sparkSession,
+        product.x_long.select("cell_id", "channel", "total").toPandas,
+        product.obs.toPandas,
+    )
+    obs = obs.set_index("cell_id")
+    channels = pd.Index(sorted(long["channel"].unique()), name="channel")
+    var = pd.DataFrame(index=channels)
+    rows = obs.index.get_indexer(long["cell_id"])
+    if (rows < 0).any():
+        raise ValueError("x_long holds cells that obs does not")
+    x = np.full((len(obs), len(channels)), np.nan)
+    x[rows, channels.get_indexer(long["channel"])] = long["total"].to_numpy(
+        dtype=np.float64
+    )
     mod = f"{product.uns['uuid']}_raw"
-    x = wide[var.index].to_numpy(dtype=np.float64)
 
     try:
         import anndata

@@ -93,6 +93,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,6 +113,7 @@ from codex_data_products_spark.plans.codex_pipeline import (
     product_uns,
     read_catalog,
     read_commit_marker,
+    write_axis_table,
     write_commit_marker,
     write_product,
     write_product_state,
@@ -119,6 +121,7 @@ from codex_data_products_spark.plans.codex_pipeline import (
 )
 from codex_data_products_spark.streaming.logstate import drain
 from codex_data_products_spark.streaming.merge import read_table
+from codex_data_products_spark.tables import run_lanes
 
 # Every written product carries its v=0 state; the name stays for
 # callers that bootstrap maintenance explicitly.
@@ -296,9 +299,9 @@ def apply_product_delta(
     new_varm = new_state["ds_varm_raw"].join(
         F.broadcast(new_var), "channel", "left_semi"
     )
-    new_var.write.mode("overwrite").parquet(f"{out_dir}/var/v={v}")
+    write_axis_table(new_var, f"{out_dir}/var/v={v}")
     _checkpoint("var")
-    new_varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
+    write_axis_table(new_varm, f"{out_dir}/varm_long/v={v}")
     new_varm = spark.read.parquet(f"{out_dir}/varm_long/v={v}")
     _checkpoint("varm_long")
 
@@ -411,7 +414,7 @@ def apply_metadata_refresh(
     new_varm = new_state["ds_varm_raw"].join(
         F.broadcast(var), "channel", "left_semi"
     )
-    new_varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
+    write_axis_table(new_varm, f"{out_dir}/varm_long/v={v}")
     new_varm = spark.read.parquet(f"{out_dir}/varm_long/v={v}")
 
     stats = product_stats_from_state(
@@ -606,18 +609,13 @@ def apply_fleet_delta(
             retain_snapshots=retain_snapshots,
         )
 
-    if max_parallel <= 1 or len(tissues) == 1:
-        return {t: one(t) for t in tissues}
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-        max_workers=min(max_parallel, len(tissues)),
-        thread_name_prefix="fleet-delta",
-    ) as pool:
-        futures = {t: pool.submit(one, t) for t in tissues}
-        # .result() re-raises the first failing tissue's exception; the
-        # with-block still drains the rest, so every tissue either
-        # committed v=batch_id+1 or crashed before its marker rename —
-        # per-product atomicity makes a partial fleet batch replayable
-        return {t: futures[t].result() for t in tissues}
+    # run_lanes re-raises the first failing tissue's exception only
+    # after every other tissue finished, so each tissue either committed
+    # v=batch_id+1 or crashed before its marker rename — per-product
+    # atomicity makes a partial fleet batch replayable
+    manifests = run_lanes(
+        spark,
+        *(partial(one, t) for t in tissues),
+        max_workers=max_parallel,
+    )
+    return dict(zip(tissues, manifests))

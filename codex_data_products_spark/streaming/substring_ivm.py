@@ -81,6 +81,7 @@ from codex_data_products_spark.streaming.logstate import (
     _write_tombstones,
     drain,
 )
+from codex_data_products_spark.tables import run_lanes
 
 _GRAMS_SCHEMA = "doc_id long, n int, pos int, g long"
 # b = pmod(xxhash64(g), _N_OCC_BUCKETS): the occ log's PARTITION column
@@ -193,8 +194,6 @@ def apply_substring_batch(
     a hash join at bulk-load batch fractions. The corpus text is never
     re-read; every state write is the batch's own rows.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = batch_docs.sparkSession
     _check_state_format(spark, state_dir)
     rem_df, has_removes = _remove_frame(spark, remove)
@@ -323,12 +322,9 @@ def apply_substring_batch(
     # lane computes it first), so it rides phase 1 too — measured 2.4-
     # 2.7 s of 64-dir commit fixed cost that otherwise serializes
     # behind the discovery barrier
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        grams_fut = pool.submit(_write_grams)
-        occ_fut = pool.submit(_write_occ)
-        occ_old_cand, affected = pool.submit(_discover).result()
-        grams_fut.result()
-        occ_fut.result()
+    _, _, (occ_old_cand, affected) = run_lanes(
+        spark, _write_grams, _write_occ, _discover
+    )
     has_repair = not affected.isEmpty()
 
     # -- 3. PHASE 2+commit, two concurrent lanes: the tombstone write
@@ -429,10 +425,7 @@ def apply_substring_batch(
                 spark, f"{state_dir}/coverage_removed/batch={batch_id + 1}"
             )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [pool.submit(w) for w in (_write_cov, _write_tombs)]
-        for fut in futures:
-            fut.result()
+    run_lanes(spark, _write_cov, _write_tombs)
     # rem_df/affected/old_r_pos may be localCheckpointed — drop their
     # blocks too, or every batch of a long-running drain leaks a few
     for frame in (

@@ -7,6 +7,9 @@ partitioned table locations; the API is identical.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,9 +92,39 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     the frame pays one Python worker round-trip per partition (~6 s
     for a coalesce(1) write of an *empty* frame at local[32]); the
     pandas path ships one Arrow batch and plans as a JVM LocalRelation.
-    ``rows``: list of tuples matching ``schema`` (a DDL string)."""
+    ``rows``: list of tuples matching ``schema`` (a DDL string). An
+    empty ``rows`` is one all-null row under ``limit(0)``: PySpark
+    sends an empty pandas frame down the RDD path, and the optimizer
+    folds the limit into an empty LocalRelation."""
     import pandas as pd
 
     names = [f.split()[0] for f in schema.split(",")]
+    if not rows:
+        return local_frame(spark, [(None,) * len(names)], schema).limit(0)
     data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)
+
+
+def run_lanes(
+    spark: SparkSession, *lanes: Callable[[], Any], max_workers: int | None = None
+) -> list:
+    """Run independent driver-side callables (each firing its own Spark
+    jobs) as concurrent lanes over ``spark`` and return their results in
+    order — the job barriers overlap, so a group of writes costs its
+    slowest lane, not the sum. ``max_workers`` caps the threads (default:
+    one per lane; 1 runs the lanes one after another in order).
+
+    Each lane is wrapped in ``pyspark.util.inheritable_thread_target``,
+    so the jobs it fires keep the caller's job group, description and
+    tags. Every lane runs to its end before the first failure (in lane
+    order) is re-raised: a crashing lane never leaves a sibling still
+    writing behind the caller's back."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    targets = [inheritable_thread_target(spark)(f) for f in lanes]
+    workers = len(targets) if max_workers is None else max_workers
+    with ThreadPoolExecutor(max_workers=max(1, min(workers, len(targets)))) as pool:
+        futures = [pool.submit(t) for t in targets]
+    return [f.result() for f in futures]

@@ -230,57 +230,129 @@ def test_wide_matrix_export(product):
     assert b1["CD4"] is None
 
 
-def test_h5mu_export_roundtrips_through_minihdf5(product, tmp_path):
+DS_D = "d" * 32
+
+
+@pytest.fixture(scope="module")
+def product_with_dropped_dataset(spark, bundle, tmp_path_factory):
+    """The bundle plus a third leaf dataset whose every channel is
+    dropped (only ``blankN`` / ``Channel:N:N``): its cells are in obs
+    with no x_long rows."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("codex_bundle_dropped")
+    shutil.copytree(bundle / "data", root / "data")
+    d = root / "data" / DS_D
+    _write(
+        str(d / "reg001_expr.ome.tiff-cell_channel_total.csv"),
+        "ID,blank1,Channel:2:3\n1,1.0,2.0\n2,3.0,4.0\n",
+    )
+    _write(
+        str(d / "reg001_expr.ome.tiff-cell_centers.csv"),
+        "ID,x,y\n1,60.0,61.0\n2,70.0,71.0\n",
+    )
+    _write(
+        str(d / "reg001_expr.ome.tiff_AdjacencyMatrix.mtx"),
+        "%%MatrixMarket matrix coordinate real symmetric\n2 2 1\n1 2 0.25\n",
+    )
+    _write(
+        str(d / "reg001_expr.ome.tiff_AdjacencyMatrixRowColLabels.txt"),
+        "1\n2\n",
+    )
+    _write(
+        str(d / "out.hdf5"),
+        json.dumps(
+            {
+                "ids": ["1", "2"],
+                "total": [[1.0, 2.0], [3.0, 4.0]],
+                "mean": [[0.1, 0.2], [0.3, 0.4]],
+            }
+        ),
+    )
+    catalog = (bundle / "uuids.tsv").read_text() + (
+        f"3\t{DS_D}\tHBM003\t{ANCESTOR}\t\t50\tF\t170\t70\t24.2\t\tWhite\n"
+    )
+    _write(str(root / "uuids.tsv"), catalog)
+    return build_product(
+        spark,
+        str(root / "data"),
+        str(root / "uuids.tsv"),
+        tissue="Spleen",
+        decoder=fake_decoder,
+        product_uuid="test-product-uuid",
+        creation_time="2026-01-01 00:00:00",
+    )
+
+
+def test_h5mu_export_roundtrips_through_minihdf5(
+    product, product_with_dropped_dataset, tmp_path
+):
     """The compat sink executes without anndata/mudata: the from-scratch
     HDF5 codec writes the mudata group layout (/mod/<uuid>_raw/X +
     obs/var groups), and walking the real bytes back recovers X, the
     obs/var indexes, and per-column values exactly as the parquet
     product holds them (reference writes the same container at
-    bin/concatenate.py:454-456)."""
+    bin/concatenate.py:454-456). X equals the Spark-side
+    ``wide_matrix`` pivot wherever a (cell, channel) pair is present,
+    and a dataset that kept no channel exports its cells as all-NaN
+    rows."""
     import math
 
     import numpy as np
 
-    from codex_data_products_spark.plans.codex_pipeline import export_h5mu
+    from codex_data_products_spark.plans.codex_pipeline import (
+        export_h5mu,
+        wide_matrix,
+    )
     from codex_data_products_spark.sources.minihdf5 import Reader
 
-    path = str(tmp_path / "product.h5mu")
-    export_h5mu(product, path)
-    with open(path, "rb") as f:
-        r = Reader(f.read())
+    for tag, prod, n_cells in (
+        ("product", product, 5),
+        ("dropped", product_with_dropped_dataset, 7),
+    ):
+        path = str(tmp_path / f"{tag}.h5mu")
+        export_h5mu(prod, path)
+        with open(path, "rb") as f:
+            r = Reader(f.read())
 
-    mod = "/mod/test-product-uuid_raw"
-    cells = list(r.dataset(f"{mod}/obs/_index"))
-    channels = list(r.dataset(f"{mod}/var/_index"))
-    x = r.dataset(f"{mod}/X")
-    assert x.shape == (len(cells), len(channels))
-    assert sorted(channels) == ["CD4", "CD8", "eCAD"]
+        mod = "/mod/test-product-uuid_raw"
+        cells = list(r.dataset(f"{mod}/obs/_index"))
+        channels = list(r.dataset(f"{mod}/var/_index"))
+        x = r.dataset(f"{mod}/X")
+        assert x.shape == (n_cells, len(channels))
+        assert len(cells) == n_cells
+        assert channels == ["CD4", "CD8", "eCAD"]
 
-    # X values match the parquet product's long relation; absent
-    # (cell, channel) pairs surface as NaN (U1 outer-concat semantics)
-    expect = {
-        (row["cell_id"], row["channel"]): row["total"]
-        for row in product.x_long.collect()
-    }
-    for i, cell in enumerate(cells):
-        for j, ch in enumerate(channels):
-            want = expect.get((cell, ch))
-            if want is None:
-                assert math.isnan(x[i, j])
-            else:
-                assert x[i, j] == want
+        # X values match the parquet product's long relation and the
+        # wide pivot; absent (cell, channel) pairs surface as NaN (U1
+        # outer-concat semantics)
+        expect = {
+            (row["cell_id"], row["channel"]): row["total"]
+            for row in prod.x_long.collect()
+        }
+        wide = {row["cell_id"]: row for row in wide_matrix(prod).collect()}
+        for i, cell in enumerate(cells):
+            for j, ch in enumerate(channels):
+                want = expect.get((cell, ch))
+                if want is None:
+                    assert math.isnan(x[i, j])
+                else:
+                    assert x[i, j] == want == wide[cell][ch]
+        dropped = [i for i, c in enumerate(cells) if c.startswith(DS_D)]
+        assert len(dropped) == (2 if tag == "dropped" else 0)
+        assert np.isnan(x[dropped]).all()
 
-    # obs columns round-trip (numeric as f64, strings fixed-length)
-    obs_rows = {row["cell_id"]: row for row in product.obs.collect()}
-    ages = r.dataset(f"{mod}/obs/age")
-    tissues = r.dataset(f"{mod}/obs/object_type")
-    for i, cell in enumerate(cells):
-        assert ages[i] == obs_rows[cell]["age"]
-        assert tissues[i] == obs_rows[cell]["object_type"]
-    assert f"{mod}/var/_index" in r
-    np.testing.assert_array_equal(
-        r.dataset(f"{mod}/obs/_index"), np.array(cells)
-    )
+        # obs columns round-trip (numeric as f64, strings fixed-length)
+        obs_rows = {row["cell_id"]: row for row in prod.obs.collect()}
+        ages = r.dataset(f"{mod}/obs/age")
+        tissues = r.dataset(f"{mod}/obs/object_type")
+        for i, cell in enumerate(cells):
+            assert ages[i] == obs_rows[cell]["age"]
+            assert tissues[i] == obs_rows[cell]["object_type"]
+        assert f"{mod}/var/_index" in r
+        np.testing.assert_array_equal(
+            r.dataset(f"{mod}/obs/_index"), np.array(cells)
+        )
 
 
 def test_product_partition_pruning(product, tmp_path, spark):

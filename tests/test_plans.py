@@ -2336,3 +2336,48 @@ def test_pair_scoring_folds_stay_out_of_join_conditions(spark, sf_dir):
         emb.filter(F.col("doc_id") % 5 == 0), emb, threshold=0.38
     )
     check(ivm_pairs._jdf.queryExecution().executedPlan().toString())
+
+
+def test_codex_product_plans_have_no_python_rdd_scans(spark, tmp_path):
+    """Every small driver-side frame of the CODEX plan is a JVM local
+    relation: the executed plans of a built product's five tables and
+    of its maintenance-state frames hold no ``ExistingRDD`` scan (a
+    Python-RDD literal costs one Python worker per partition in every
+    job that reads it), and the HDF5 decode's ``MapInPandas`` is their
+    only Python stage."""
+    import importlib.util
+    import os
+    import re
+
+    from codex_data_products_spark.plans.codex_pipeline import (
+        PRODUCT_TABLES,
+        build_product,
+        derive_product_state,
+    )
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "codex_stress", os.path.join(repo, "tools", "codex_stress.py")
+    )
+    codex_stress = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(codex_stress)
+    codex_stress.generate(str(tmp_path), 2, 5)
+    product = build_product(
+        spark,
+        str(tmp_path / "data"),
+        str(tmp_path / "uuids.tsv"),
+        tissue="Spleen",
+        product_uuid="plan-guard",
+        creation_time="2026-01-01 00:00:00",
+    )
+    frames = {t: getattr(product, t) for t in PRODUCT_TABLES}
+    frames.update(derive_product_state(product))
+    python_node = re.compile(
+        r"\b(\w*EvalPython\w*|\w+InPandas\w*|\w*InArrow\w*|\w*PythonUDTF\w*)\b"
+    )
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+        assert set(python_node.findall(plan)) <= {"MapInPandas"}, (name, plan)
+    x_plan = frames["x_long"]._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in x_plan

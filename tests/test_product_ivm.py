@@ -510,6 +510,29 @@ def test_delta_on_written_product_equals_from_scratch(spark, bundle, tmp_path):
     )
 
 
+def test_delta_axis_tables_are_one_sorted_file(spark, bundle, tmp_path):
+    """An add batch writes var/v=1 and varm_long/v=1 (channel-grain) as
+    one file each from one writer task, rows sorted by (channel,
+    dataset): the same batch on the same inputs commits the same bytes,
+    whatever the upstream plan's split."""
+    out = str(tmp_path / "product")
+    write_product(_build(spark, bundle, DS[:1]), out)
+    apply_product_delta(
+        spark, out, os.path.join(bundle, "data"),
+        os.path.join(bundle, "uuids.tsv"), 0, add=[DS[1]],
+    )
+    files = read_commit_marker(out)["files"]
+    for table in ("varm_long", "var"):
+        assert len(files[table]) == 1, files[table]
+        rows = [
+            tuple(r) for r in spark.read.parquet(f"{out}/{table}/v=1").collect()
+        ]
+        assert rows and rows == sorted(rows, key=lambda r: r[:2]), table
+    varm = spark.read.parquet(f"{out}/varm_long/v=1")
+    assert varm.columns[:2] == ["channel", "dataset"]
+    assert {r["dataset"] for r in varm.collect()} == set(DS[:2])
+
+
 def test_marker_without_file_manifest_fails_fast(tmp_path):
     """A commit without its file-level manifest is refused at the
     marker, with the remedy, by every reader and by retention GC."""
